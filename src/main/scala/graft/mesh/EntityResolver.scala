@@ -79,11 +79,27 @@ object EntityResolver {
     * everything reachable through remote mappings with resolveRec's visited
     * semantics — include a parquet file-backed source? */
   private def pathHasParquetFileSource(
-      mesh: Mesh, siteName: String, entityName: String): Boolean = {
+      mesh: Mesh, siteName: String, entityName: String): Boolean =
+    pathExists(mesh, siteName, entityName)((s, entity) =>
+      s.localSources.getOrElse(entity, Nil)
+        .exists(_.fileSource.exists(_.format == "parquet")))
+
+  /** Does the resolution path of (site, entity) reach an endpoint-backed
+    * peer? Resolving such a path fetches the peer's rows over the wire
+    * into the plan, so the plan holds the rows as of that fetch. */
+  private[graft] def pathReachesEndpoint(
+      mesh: Mesh, siteName: String, entityName: String): Boolean =
+    pathExists(mesh, siteName, entityName)((s, _) =>
+      s.name != siteName && s.endpoint.nonEmpty)
+
+  /** Walk (site, entity) and every (peer, remote entity) its remote
+    * mappings reach, with resolveRec's visited semantics; true once
+    * `hit` holds for one of them. */
+  private def pathExists(mesh: Mesh, siteName: String, entityName: String)(
+      hit: (Site, String) => Boolean): Boolean = {
     def walk(site: String, entity: String, visited: Set[String]): Boolean = {
       val s = mesh.site(site)
-      s.localSources.getOrElse(entity, Nil)
-        .exists(_.fileSource.exists(_.format == "parquet")) ||
+      hit(s, entity) ||
         s.remoteMappings.getOrElse(entity, Nil)
           .filterNot(rm => visited.contains(rm.peer))
           .filter(rm => mesh.sites.contains(rm.peer)) // offline peers skipped
@@ -292,9 +308,12 @@ object EntityResolver {
               // THE PEER (the reference ships the mapped request to the
               // remote relay, `core/src/execute/map_remote.rs` semantics);
               // identity, user, and the visited set cross in headers, and
-              // the result comes back as parquet. The fetch happens at
+              // the result comes back as an Arrow stream decoded into
+              // in-memory rows (parquet past the peer's Arrow row cap or
+              // for types the codec does not carry). The fetch happens at
               // resolve time — the reference's get_flight_info + do_get
-              // are likewise issued when the scan is planned.
+              // are likewise issued when the scan is planned — so the
+              // plan holds the peer's rows as of this call.
               val templated = graft.transport.RelayClient.syncFetch(
                 spark, url, rm.renderSql(rm.remoteEntity), user,
                 viaRelay = siteName, visited = visited + rm.peer,
@@ -460,7 +479,7 @@ object EntityResolver {
   /** RemoteInfoMapping renames/transforms + provenance passthrough over an
     * already-templated remote relation — shared by the in-process path
     * (template applied locally) and the wire path (template executed on the
-    * peer, result fetched as parquet). */
+    * peer, result fetched over the wire). */
   private[graft] def remoteInfoProjection(
       entity: Entity,
       rm: RemoteEntityMapping,

@@ -44,9 +44,12 @@ class MeshSession private (
     * ViewEpoch, so any shared-temp-view shadow (another session's
     * entity registration, a fixture re-assert) also re-analyzes.
     * Cached = a PLAN; every action re-optimizes and re-executes from
-    * the sources. Bounded: a serving session's distinct-text cache is
-    * capped, dropping wholesale at the cap (plans are cheap to rebuild;
-    * an LRU would be ceremony). */
+    * the sources. An entity whose resolution path reaches an
+    * endpoint-backed peer is never cached: its plan holds the rows the
+    * peer returned at resolve time, and a change on the peer moves
+    * neither the local Mesh nor the epoch. Bounded: a serving session's
+    * distinct-text cache is capped, dropping wholesale at the cap (plans
+    * are cheap to rebuild; an LRU would be ceremony). */
   private val planCache = scala.collection.concurrent.TrieMap
     .empty[(String, Option[String], Boolean, Option[StructType]),
       (graft.catalog.Mesh, Long, DataFrame)]
@@ -72,17 +75,19 @@ class MeshSession private (
         val entityDF =
           EntityResolver.resolve(spark, meshNow, siteName, entity, user, withProvenance)
         // register + analyze atomically w.r.t. concurrent async submits that
-        // use the same shared-name view
-        val out = QueryService.planLock.synchronized {
+        // use the same shared-name view; the epoch is read under the same
+        // lock, right after our own registration bump — unchanged epoch
+        // means unchanged catalog for the next identical query
+        val (out, epoch) = QueryService.planLock.synchronized {
           entityDF.createOrReplaceTempView(entity)
           ViewEpoch.noteShadow()
-          spark.sql(SqlValidator.preprocess(sqlText))
+          (spark.sql(SqlValidator.preprocess(sqlText)), ViewEpoch.current)
         }
         val cast = returnSchema.map(EntityResolver.castToSchema(out, _)).getOrElse(out)
-        if (planCache.size >= PlanCacheMax) planCache.clear()
-        // the epoch AFTER our own registration bump — unchanged epoch
-        // means unchanged catalog for the next identical query
-        planCache.put(key, (meshNow, ViewEpoch.current, cast))
+        if (!EntityResolver.pathReachesEndpoint(meshNow, siteName, entity)) {
+          if (planCache.size >= PlanCacheMax) planCache.clear()
+          planCache.put(key, (meshNow, epoch, cast))
+        }
         cast
     }
   }

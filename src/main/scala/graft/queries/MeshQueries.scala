@@ -160,7 +160,7 @@ object MeshQueries {
                   .map(i => RemoteInfoMapping(i.name, i.name)))))),
           "beta" -> stub))
         // the wire fetch happens here (resolve-time do_get); afterwards the
-        // remote half is a local splittable parquet file and the server can go
+        // remote half is held in memory and the server can go
         graft.mesh.EntityResolver
           .resolve(s, mesh, "alpha", "documents", withProvenance = true)
           .groupBy(col("lang"), col(graft.mesh.EntityResolver.SourceIdCol))

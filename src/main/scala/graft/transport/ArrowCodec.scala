@@ -1,6 +1,6 @@
 package graft.transport
 
-import java.io.{InputStream, OutputStream}
+import java.io.OutputStream
 import java.nio.channels.Channels
 import java.nio.charset.StandardCharsets.UTF_8
 
@@ -8,7 +8,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.arrow.memory.RootAllocator
 import org.apache.arrow.vector._
-import org.apache.arrow.vector.ipc.{ArrowStreamReader, ArrowStreamWriter}
+import org.apache.arrow.vector.ipc.ArrowStreamWriter
 import org.apache.arrow.vector.types.{DateUnit, FloatingPointPrecision, TimeUnit}
 import org.apache.arrow.vector.types.pojo.{ArrowType, Field, FieldType, Schema}
 import org.apache.spark.sql.Row
@@ -20,23 +20,27 @@ import org.apache.spark.sql.types._
   * the zero-egress build environment has `arrow-vector`/`arrow-format`
   * but no flight-core/gRPC artifacts. With this codec the wire concession
   * vs the reference narrows to the CARRIER (gRPC + mTLS); the payload
-  * encoding is the reference's own. Parquet remains the bulk-result
-  * path — Arrow streams are driver-serialized and row-capped like the
-  * NDJSON export, sized for the mapped/aggregated partials that
-  * legitimately cross the mesh wire.
+  * encoding is the reference's own. It is the sync wire hop's default
+  * body; parquet remains the bulk-result path — Arrow streams are
+  * driver-serialized and row-capped like the NDJSON export, sized for the
+  * mapped/aggregated partials that legitimately cross the mesh wire.
   *
   * Type surface = what mesh results carry: integral/floating scalars,
   * strings, booleans, dates (epoch-day), microsecond timestamps (UTC —
   * the session timezone every graft session pins), binary. Anything else
-  * fails loudly rather than degrade. */
+  * fails loudly rather than degrade. Streams decode back through Spark's
+  * own Arrow reader and schema mapping
+  * (`org.apache.spark.sql.graft.ColumnBridge.fromArrowStream`), which
+  * agrees with [[arrowField]] on every type written here. */
 object ArrowCodec {
 
   val ContentType = "application/vnd.apache.arrow.stream"
 
-  /** The exact type set [[arrowField]] encodes — callers (the relay's
-    * content negotiation) use this to REJECT an unsupported result schema
-    * before any response bytes are committed, instead of discovering the
-    * IllegalArgumentException mid-stream after the 200 header. */
+  /** The exact type set [[arrowField]] encodes — the relay's content
+    * negotiation checks a result schema against it before any response
+    * bytes are committed (answering parquet or 406), instead of
+    * discovering the IllegalArgumentException mid-stream after the 200
+    * header. */
   def supports(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
     case LongType | IntegerType | ShortType | DoubleType | FloatType |
          StringType | BooleanType | DateType | TimestampType | BinaryType => true
@@ -63,24 +67,6 @@ object ArrowCodec {
     new Field(f.name, FieldType.nullable(t), null)
   }
 
-  private def sparkField(f: Field): StructField = {
-    val t = f.getType match {
-      case i: ArrowType.Int if i.getBitWidth == 64 => LongType
-      case i: ArrowType.Int if i.getBitWidth == 32 => IntegerType
-      case i: ArrowType.Int if i.getBitWidth == 16 => ShortType
-      case fp: ArrowType.FloatingPoint if fp.getPrecision == FloatingPointPrecision.DOUBLE => DoubleType
-      case fp: ArrowType.FloatingPoint if fp.getPrecision == FloatingPointPrecision.SINGLE => FloatType
-      case _: ArrowType.Utf8 => StringType
-      case _: ArrowType.Bool => BooleanType
-      case _: ArrowType.Date => DateType
-      case _: ArrowType.Timestamp => TimestampType
-      case _: ArrowType.Binary => BinaryType
-      case other =>
-        throw new IllegalArgumentException(s"unsupported arrow type $other")
-    }
-    StructField(f.getName, t, nullable = true)
-  }
-
   private def tsMicros(ts: java.sql.Timestamp): Long =
     Math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000L
 
@@ -102,29 +88,6 @@ object ArrowCodec {
       throw new IllegalArgumentException(
         s"unsupported value class ${other.getClass.getName}")
   }
-
-  private def getValue(v: FieldVector, i: Int): Any =
-    if (v.isNull(i)) null
-    else v match {
-      case x: BigIntVector => x.get(i)
-      case x: IntVector => x.get(i)
-      case x: SmallIntVector => x.get(i)
-      case x: Float8Vector => x.get(i)
-      case x: Float4Vector => x.get(i)
-      case x: VarCharVector => new String(x.get(i), UTF_8)
-      case x: BitVector => x.get(i) == 1
-      case x: DateDayVector =>
-        java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(x.get(i).toLong))
-      case x: TimeStampMicroTZVector =>
-        val us = x.get(i)
-        val ts = new java.sql.Timestamp(Math.floorDiv(us, 1000000L) * 1000L)
-        ts.setNanos((Math.floorMod(us, 1000000L) * 1000L).toInt)
-        ts
-      case x: VarBinaryVector => x.get(i)
-      case other =>
-        throw new IllegalArgumentException(
-          s"unsupported vector ${other.getClass.getName}")
-    }
 
   /** Write `rows` (external Row representation, `schema`-shaped) as one
     * Arrow IPC stream: schema message, then `batchSize`-row record
@@ -157,29 +120,6 @@ object ArrowCodec {
         }
         writer.end()
       } finally root.close()
-    } finally allocator.close()
-  }
-
-  /** Read one Arrow IPC stream fully into (spark schema, rows). */
-  def read(in: InputStream): (StructType, Seq[Row]) = {
-    val allocator = new RootAllocator()
-    try {
-      val reader = new ArrowStreamReader(in, allocator)
-      try {
-        val root = reader.getVectorSchemaRoot
-        val schema = StructType(
-          root.getSchema.getFields.asScala.map(sparkField).toArray)
-        val rows = Vector.newBuilder[Row]
-        while (reader.loadNextBatch()) {
-          val vectors = root.getFieldVectors.asScala.toIndexedSeq
-          var i = 0
-          while (i < root.getRowCount) {
-            rows += Row.fromSeq(vectors.map(v => getValue(v, i)))
-            i += 1
-          }
-        }
-        (schema, rows.result())
-      } finally reader.close()
     } finally allocator.close()
   }
 }

@@ -8,6 +8,7 @@ import java.time.Duration
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.catalog.{ArrowLikeType, Entity, Information, Site}
@@ -20,14 +21,19 @@ import graft.catalog.{ArrowLikeType, Entity, Information, Site}
   *
   * Endpoints are plain `http://host:port` URLs; URL userinfo
   * (`http://token@host:port`) is stripped from the request URI and sent as
-  * the `X-Graft-Token` shared secret instead. All transfers stream through
-  * temp files, never heap-wide buffers: a fetched result lands as a local
-  * parquet file that Spark then scans lazily (and distributed — the file is
-  * splittable), so no row ever materializes on the client driver.
+  * the `X-Graft-Token` shared secret instead. A sync fetch negotiates
+  * the Arrow IPC stream (the Flight do_get body, see [[ArrowCodec]]) and
+  * decodes it in memory into Spark's internal rows; the peer answers parquet
+  * instead when the result is past its Arrow row cap or holds a type the
+  * codec does not carry. A parquet body (that fallback, async results)
+  * streams through a temp file that Spark then scans lazily (and
+  * distributed — the file is splittable), so no bulk result ever
+  * materializes on the client driver.
   */
 object RelayClient {
 
   private val mapper = new ObjectMapper()
+  private val ParquetType = "application/vnd.apache.parquet"
   private lazy val http = HttpClient.newBuilder()
     .connectTimeout(Duration.ofSeconds(10))
     .build()
@@ -74,11 +80,10 @@ object RelayClient {
   private def checkOk(resp: HttpResponse[_], what: String): Unit =
     if (resp.statusCode() / 100 != 2) {
       val detail = resp.body() match {
-        case b: Array[Byte] => new String(b, UTF_8)
-        case s: String      => s
-        case p: Path        =>
-          try new String(Files.readAllBytes(p), UTF_8) finally { Files.deleteIfExists(p): Unit }
-        case other          => String.valueOf(other)
+        case b: Array[Byte]       => new String(b, UTF_8)
+        case Left(b: Array[Byte]) => new String(b, UTF_8) // fetch's error body
+        case s: String            => s
+        case other                => String.valueOf(other)
       }
       throw new RelayException(
         s"$what failed: HTTP ${resp.statusCode()} ${detail.take(500)}")
@@ -115,49 +120,27 @@ object RelayClient {
 
   // ---- synchronous path (Flight do_get analogue) ------------------------
 
+  /** What a sync fetch accepts: the Arrow stream, else parquet. */
+  private[graft] val SyncAccept =
+    s"${ArrowCodec.ContentType}, $ParquetType;q=0.5"
+
   /** Run `sql` on the peer as forwarding relay `viaRelay` and read the
-    * parquet response into a DataFrame. The download is eager (it happens
-    * when the resolver builds the plan, like get_flight_info + do_get at
-    * scan planning); the SCAN of the downloaded file is lazy and
-    * distributed. */
+    * response into a DataFrame: an Arrow body decodes in memory into
+    * Spark's internal rows, a parquet body lands in a temp file scanned
+    * lazily. The download is eager (it happens when the resolver builds
+    * the plan, like get_flight_info + do_get at scan planning). */
   def syncFetch(spark: SparkSession, endpoint: String, sql: String,
       user: Option[String], viaRelay: String, visited: Set[String],
       withProvenance: Boolean): DataFrame = {
     val req = request(endpoint, "/query/sync", Some(viaRelay), visited)
       .header("Content-Type", "application/json")
+      .header("Accept", SyncAccept)
       .POST(bodyJson(
         "sql" -> Some(sql),
         "user" -> user,
         "with_provenance" -> Some(withProvenance.toString)))
       .build()
-    fetchParquet(spark, req, s"POST $endpoint/query/sync")
-  }
-
-  /** [[syncFetch]] over the Arrow IPC stream encoding — the Flight
-    * do_get body framing (see [[ArrowCodec]]). The stream deserializes
-    * on the client driver (it is row-capped server-side), so this is
-    * the small-result / interoperability path; bulk entity fetches use
-    * the splittable parquet route. */
-  def syncFetchArrow(spark: SparkSession, endpoint: String, sql: String,
-      user: Option[String], viaRelay: String, visited: Set[String],
-      withProvenance: Boolean): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    val req = request(endpoint, "/query/sync", Some(viaRelay), visited)
-      .header("Content-Type", "application/json")
-      .header("Accept", ArrowCodec.ContentType)
-      .POST(bodyJson(
-        "sql" -> Some(sql),
-        "user" -> user,
-        "with_provenance" -> Some(withProvenance.toString)))
-      .build()
-    val resp = http.send(req, HttpResponse.BodyHandlers.ofByteArray())
-    checkOk(resp, s"POST $endpoint/query/sync (arrow)")
-    val ct = resp.headers().firstValue("Content-Type").orElse("")
-    require(ct == ArrowCodec.ContentType,
-      s"peer did not negotiate arrow (got '$ct')")
-    val (schema, rows) =
-      ArrowCodec.read(new java.io.ByteArrayInputStream(resp.body()))
-    spark.createDataFrame(rows.asJava, schema)
+    fetch(spark, req, s"POST $endpoint/query/sync")
   }
 
   // ---- async REST path --------------------------------------------------
@@ -223,7 +206,7 @@ object RelayClient {
   def result(spark: SparkSession, endpoint: String, id: String,
       allowPartial: Boolean = false): DataFrame = {
     val qs = if (allowPartial) "?allow_partial=true" else ""
-    fetchParquet(spark,
+    fetch(spark,
       request(endpoint, s"/query/$id/result$qs").GET().build(),
       s"GET $endpoint/query/$id/result")
   }
@@ -288,7 +271,7 @@ object RelayClient {
         } finally s.close()
       }
       val req = request(endpoint, s"/ingest/${urlEnc(id)}/${urlEnc(branch)}")
-        .header("Content-Type", "application/vnd.apache.parquet")
+        .header("Content-Type", ParquetType)
         .PUT(HttpRequest.BodyPublishers.ofFile(part))
         .build()
       val resp = http.send(req, HttpResponse.BodyHandlers.ofByteArray())
@@ -302,42 +285,72 @@ object RelayClient {
 
   // ---- plumbing ---------------------------------------------------------
 
-  /** Execute a request whose 200 response is parquet bytes; lands in a temp
-    * file Spark scans lazily. An `X-Graft-Empty` header short-circuits to
-    * an empty frame with the carried schema. */
-  private def fetchParquet(spark: SparkSession, req: HttpRequest,
-      what: String): DataFrame = {
-    val tmp = Files.createTempFile("graft_wire_", ".parquet")
-    tmp.toFile.deleteOnExit()
-    val resp = http.send(req, HttpResponse.BodyHandlers.ofFile(tmp))
-    if (resp.statusCode() / 100 != 2) {
-      val detail = new String(Files.readAllBytes(tmp), UTF_8)
-      Files.deleteIfExists(tmp): Unit
-      throw new RelayException(
-        s"$what failed: HTTP ${resp.statusCode()} ${detail.take(500)}")
+  /** Where a response body goes: an Arrow stream (and an error body) stays
+    * in memory; any other 200 body is parquet and lands in a temp file. */
+  private val bodyTarget: HttpResponse.BodyHandler[Either[Array[Byte], Path]] =
+    info => {
+      val arrow = info.headers().firstValue("Content-Type").orElse("") ==
+        ArrowCodec.ContentType
+      if (arrow || info.statusCode() / 100 != 2)
+        HttpResponse.BodySubscribers.mapping(
+          HttpResponse.BodySubscribers.ofByteArray(),
+          (b: Array[Byte]) => Left(b): Either[Array[Byte], Path])
+      else {
+        val tmp = Files.createTempFile("graft_wire_", ".parquet")
+        tmp.toFile.deleteOnExit()
+        HttpResponse.BodySubscribers.mapping(
+          HttpResponse.BodySubscribers.ofFile(tmp),
+          (p: Path) => Right(p): Either[Array[Byte], Path])
+      }
     }
-    Option(resp.headers().firstValue("X-Graft-Empty").orElse(null)) match {
-      case Some(b64) =>
-        Files.deleteIfExists(tmp): Unit
-        val schema = DataType.fromJson(
-          new String(java.util.Base64.getDecoder.decode(b64), UTF_8))
-          .asInstanceOf[StructType]
-        spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
-      case None =>
-        val df = spark.read.parquet(tmp.toString)
-        logFetched(what, tmp, df)
+
+  /** Execute a request whose 200 response is an Arrow stream or parquet
+    * bytes. An Arrow body becomes in-memory rows with no Spark job; a
+    * parquet body is scanned lazily from its temp file, and an
+    * `X-Graft-Empty` header short-circuits to an empty frame with the
+    * carried schema. */
+  private def fetch(spark: SparkSession, req: HttpRequest,
+      what: String): DataFrame = {
+    val resp = http.send(req, bodyTarget)
+    checkOk(resp, what)
+    resp.body() match {
+      case Left(body) =>
+        val (df, rows) = ColumnBridge.fromArrowStream(spark, body)
+        wireLog(s"$what -> arrow rows=$rows bytes=${body.length} " +
+          s"schema=${df.schema.simpleString.take(300)}")
         df
+      case Right(tmp) =>
+        Option(resp.headers().firstValue("X-Graft-Empty").orElse(null)) match {
+          case Some(b64) =>
+            Files.deleteIfExists(tmp): Unit
+            val schema = DataType.fromJson(
+              new String(java.util.Base64.getDecoder.decode(b64), UTF_8))
+              .asInstanceOf[StructType]
+            spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+          case None =>
+            val df = spark.read.parquet(tmp.toString)
+            if (!wireQuiet) logParquet(what, tmp, df)
+            df
+        }
     }
   }
 
-  /** Diagnostic stderr line for every wire fetch: row count, schema, and
-    * per-column min/max of the fetched payload. Only mesh RESULTS cross the
-    * wire (small by design), and federation divergence has historically been
-    * observable only in the driver's sandbox — this makes the fetched values
-    * auditable from the run log. Disable with GRAFT_WIRE_QUIET=1. */
-  private def logFetched(what: String, tmp: Path, df: DataFrame): Unit = {
-    if (sys.env.get("GRAFT_WIRE_QUIET").exists(_ == "1") ||
-        sys.props.get("graft.wire.quiet").exists(_ == "1")) return
+  /** Diagnostic stderr lines for every wire fetch. Only mesh RESULTS cross
+    * the wire (small by design), and federation divergence has historically
+    * been observable only in the driver's sandbox — this makes the fetched
+    * payloads auditable from the run log. Disable with GRAFT_WIRE_QUIET=1
+    * (or the `graft.wire.quiet` property). */
+  private def wireQuiet: Boolean =
+    sys.env.get("GRAFT_WIRE_QUIET").exists(_ == "1") ||
+      sys.props.get("graft.wire.quiet").exists(_ == "1")
+
+  private def wireLog(line: => String): Unit =
+    if (!wireQuiet) System.err.println(s"[wire] $line")
+
+  /** A parquet fetch's line carries the row count and per-column min/max
+    * of the payload, one aggregation job (an Arrow fetch logs the decoded
+    * stream's row and byte counts instead, with no job). */
+  private def logParquet(what: String, tmp: Path, df: DataFrame): Unit =
     try {
       import org.apache.spark.sql.functions.{count, lit, max, min}
       val cols = df.columns
@@ -349,14 +362,12 @@ object RelayClient {
       val stats = cols.zipWithIndex.map { case (c, i) =>
         s"$c=[${short(r.get(1 + 2 * i))}..${short(r.get(2 + 2 * i))}]"
       }.mkString(" ")
-      System.err.println(
-        s"[wire] $what -> $tmp rows=${r.getLong(0)} " +
-          s"schema=${df.schema.simpleString.take(300)} $stats")
+      wireLog(s"$what -> $tmp rows=${r.getLong(0)} " +
+        s"schema=${df.schema.simpleString.take(300)} $stats")
     } catch {
       case e: Throwable =>
-        System.err.println(s"[wire] $what -> $tmp (stats failed: ${e.getMessage})")
+        wireLog(s"$what -> $tmp (stats failed: ${e.getMessage})")
     }
-  }
 
   private def urlEnc(s: String): String =
     java.net.URLEncoder.encode(s, UTF_8)

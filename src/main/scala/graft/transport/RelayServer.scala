@@ -38,9 +38,12 @@ import graft.validation.SqlValidator
   *   - `GET  /query/{id}/result[?allow_partial=true]`  parquet bytes
   *   - `GET  /query/{id}/ndjson`            NDJSON with `_relay_metadata_`
   *   - `POST /query/sync`                   {sql, user?, with_provenance?}
-  *     → parquet bytes, or the Arrow IPC stream when negotiated (the
-  *     Flight do_get path; relay identity and the visited-relay cycle
-  *     guard cross in `X-Graft-Relay`/`X-Graft-Visited`)
+  *     → the Arrow IPC stream when the caller accepts it, else parquet
+  *     bytes; a caller accepting both (a peer relay's wire hop) gets
+  *     parquet only for a result past the Arrow row cap or with a type the
+  *     codec does not carry (the Flight do_get path; relay identity and
+  *     the visited-relay cycle guard cross in
+  *     `X-Graft-Relay`/`X-Graft-Visited`)
   *   - `PUT  /ingest/{id}/{branch}`         parquet bytes pushed by an
   *     executor relay (do_put)
   *
@@ -343,12 +346,13 @@ final class RelayServer(
   }
 
   /** POST /query/sync: the Flight do_get path — validate/resolve/execute
-    * with the caller relay's identity and visited set, stream parquet —
-    * or, when the caller negotiates `Accept:
-    * application/vnd.apache.arrow.stream` (or sends `format: "arrow"`),
-    * the Arrow IPC stream a Flight do_get body actually is (see
-    * [[ArrowCodec]]; row-capped like the NDJSON export — parquet stays
-    * the bulk path). */
+    * with the caller relay's identity and visited set, then answer in
+    * the format the caller accepts. Negotiating `Accept:
+    * application/vnd.apache.arrow.stream` (or sending `format: "arrow"`)
+    * asks for the Arrow IPC stream a Flight do_get body actually is (see
+    * [[ArrowCodec]]); a caller that also lists parquet gets parquet when
+    * the result cannot go as Arrow, one that does not gets the 406 or
+    * 413; a caller that asks for no Arrow gets parquet. */
   private def syncQuery(ex: HttpExchange, auth: Auth): Unit = {
     val body = mapper.readTree(ex.getRequestBody)
     val sql = reqField(body, "sql")
@@ -359,32 +363,34 @@ final class RelayServer(
     val accept = Option(ex.getRequestHeaders.getFirst("Accept")).getOrElse("")
     val wantsArrow = accept.contains("arrow") ||
       Option(body.get("format")).exists(_.asText("") == "arrow")
-    if (wantsArrow) respondArrow(ex, df) else respondParquet(ex, df)
+    if (!wantsArrow) respondParquet(ex, df)
+    else encodeArrow(df) match {
+      case Right(bytes) => respond(ex, 200, ArrowCodec.ContentType, bytes)
+      case Left(_) if accept.contains("parquet") => respondParquet(ex, df)
+      case Left((code, msg)) => respond(ex, code, "application/json", errJson(msg))
+    }
   }
 
-  /** Serialize a result as one Arrow IPC stream. Driver-side like the
-    * NDJSON export, and capped the same way: past the cap the caller
-    * must fetch the splittable parquet instead.
+  /** Serialize a result as one Arrow IPC stream, or say why it cannot
+    * go as one: the HTTP status and message an Arrow-only caller gets.
+    * Driver-side like the NDJSON export, and capped the same way: past
+    * the cap the result is the splittable parquet's to carry.
     *
-    * Status codes are decided BEFORE any response byte is committed:
-    * an unsupported column type answers 406 (the codec's type set is
-    * checked against the schema up front, not discovered mid-stream
-    * after a 200), and the cap answers 413 — the encoded stream is
-    * buffered (this is the negotiated small-result path; bulk results
-    * take parquet) and the single toLocalIterator execution replaces
-    * the old count()-then-iterate double execution. */
-  private def respondArrow(ex: HttpExchange, df: DataFrame): Unit = {
+    * Decided BEFORE any response byte is committed: an unsupported
+    * column type is 406 (the codec's type set is checked against the
+    * schema up front, not discovered mid-stream after a 200), and the
+    * cap is 413 — the encoded stream is buffered (this is the
+    * small-result path; bulk results take parquet) and one
+    * toLocalIterator execution both counts and encodes the rows. */
+  private def encodeArrow(df: DataFrame): Either[(Int, String), Array[Byte]] = {
     import scala.jdk.CollectionConverters._
     val cap = sys.props.get("graft.arrow.maxRows")
       .orElse(sys.env.get("GRAFT_ARROW_MAX_ROWS")).getOrElse("1000000").toLong
     val bad = df.schema.fields.filterNot(f => ArrowCodec.supports(f.dataType))
-    if (bad.nonEmpty) {
-      respond(ex, 406, "application/json",
-        errJson("arrow transport does not carry " +
-          bad.map(f => s"${f.name}: ${f.dataType.simpleString}").mkString(", ") +
-          "; fetch the parquet result instead"))
-      return
-    }
+    if (bad.nonEmpty)
+      return Left((406, "arrow transport does not carry " +
+        bad.map(f => s"${f.name}: ${f.dataType.simpleString}").mkString(", ") +
+        "; fetch the parquet result instead"))
     val it = df.toLocalIterator().asScala
     var n = 0L
     val limited = new Iterator[org.apache.spark.sql.Row] {
@@ -393,17 +399,10 @@ final class RelayServer(
     }
     val buf = new java.io.ByteArrayOutputStream()
     ArrowCodec.write(df.schema, limited, buf)
-    if (it.hasNext) {
-      respond(ex, 413, "application/json",
-        errJson(s"result exceeds the arrow cap of $cap rows; " +
-          "negotiate parquet instead or raise GRAFT_ARROW_MAX_ROWS"))
-      return
-    }
-    val bytes = buf.toByteArray
-    ex.getResponseHeaders.set("Content-Type", ArrowCodec.ContentType)
-    ex.sendResponseHeaders(200, bytes.length.toLong)
-    val out = ex.getResponseBody
-    try out.write(bytes) finally out.close()
+    if (it.hasNext)
+      Left((413, s"result exceeds the arrow cap of $cap rows; " +
+        "negotiate parquet instead or raise GRAFT_ARROW_MAX_ROWS"))
+    else Right(buf.toByteArray)
   }
 
   /** PUT /ingest/{id}/{branch}: do_put — an executor relay pushes a

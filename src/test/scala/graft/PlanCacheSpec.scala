@@ -94,4 +94,68 @@ class PlanCacheSpec extends AnyFunSuite {
     graft.mesh.ViewEpoch.noteShadow()
     assert(!(session.sql(q) eq df4), "an epoch bump must invalidate")
   }
+
+  test("MeshSession: a repeated text sees a wire peer's change (endpoint paths skip the cache)") {
+    import graft.transport.{RelayClient, RelayServer}
+    Fixtures.registerRaw(spark, sfDir)
+    def docsYaml(filter: String) =
+      s"""api_version: v1alpha1
+         |kind: Entity
+         |spec:
+         |  name: documents
+         |  information:
+         |    - {name: doc_id, arrow_dtype: Int64}
+         |    - {name: lang, arrow_dtype: Utf8}
+         |---
+         |api_version: v1alpha1
+         |kind: LocalData
+         |spec:
+         |  name: beta_conn
+         |  data_sources:
+         |    - name: docs_some
+         |      source_sql: SELECT * FROM raw_documents WHERE $filter
+         |      fields:
+         |        - {name: doc_id, path: doc_id}
+         |        - {name: lang, path: lang}
+         |---
+         |api_version: v1alpha1
+         |kind: LocalMapping
+         |spec:
+         |  entity_name: documents
+         |  mappings:
+         |    - data_con_name: beta_conn
+         |      source_mappings:
+         |        - data_source_name: docs_some
+         |          field_mappings:
+         |            - {info: doc_id, field: doc_id}
+         |            - {info: lang, field: lang}
+         |""".stripMargin
+    // beta: a registry-backed peer relay over its own socket
+    val betaReg = new MeshRegistry(Mesh(Map("beta" -> Site("beta", Map.empty))))
+    val betaSession = new MeshSession(spark, betaReg, "beta")
+    val dir = java.nio.file.Files.createTempDirectory("graft_pc_peer").toString
+    val beta = new RelayServer(betaSession,
+      new graft.mesh.QueryService(betaSession, dir), registry = Some(betaReg))
+    try {
+      RelayClient.adminApply(beta.url, docsYaml("doc_id < 5"))
+      val stub = RelayClient.catalogSite(beta.url)
+      val docs = stub.entities("documents")
+      val alpha = new MeshSession(spark, Mesh(Map(
+        "alpha" -> Site("alpha",
+          entities = Map("documents" -> docs),
+          remoteMappings = Map("documents" -> Seq(RemoteEntityMapping(
+            peer = "beta", remoteEntity = "documents",
+            infoMappings = docs.informations.map(i =>
+              RemoteInfoMapping(i.name, i.name)))))),
+        "beta" -> stub)), "alpha")
+      val q = "select doc_id from documents order by doc_id"
+      def expected(filter: String) = spark.table("raw_documents").where(filter)
+        .select(col("doc_id")).orderBy("doc_id").collect().toSeq
+      assert(alpha.sql(q).collect().toSeq == expected("doc_id < 5"))
+      // the peer's source changes; alpha's own catalog does not
+      RelayClient.adminApply(beta.url, docsYaml("doc_id < 8"))
+      assert(expected("doc_id < 8") != expected("doc_id < 5"))
+      assert(alpha.sql(q).collect().toSeq == expected("doc_id < 8"))
+    } finally beta.stop()
+  }
 }

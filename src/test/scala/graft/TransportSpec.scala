@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -44,6 +46,48 @@ class TransportSpec extends AnyFunSuite {
     Mesh(Map("beta" -> Site("beta",
       entities = Map("documents" -> Fixtures.documentsEntity),
       localSources = Map("documents" -> Seq(src)))))
+
+  /** `POST /query/sync` with `sql` and an explicit `Accept`, as a client
+    * other than [[RelayClient]] would send it. */
+  private def postSync(url: String, sql: String,
+      accept: String): java.net.http.HttpResponse[Array[Byte]] = {
+    val body = new com.fasterxml.jackson.databind.ObjectMapper()
+      .createObjectNode().put("sql", sql).toString
+    java.net.http.HttpClient.newHttpClient().send(
+      java.net.http.HttpRequest.newBuilder(java.net.URI.create(url + "/query/sync"))
+        .header("Content-Type", "application/json")
+        .header("Accept", accept)
+        .POST(java.net.http.HttpRequest.BodyPublishers.ofString(body))
+        .build(),
+      java.net.http.HttpResponse.BodyHandlers.ofByteArray())
+  }
+
+  private val ParquetType = "application/vnd.apache.parquet"
+
+  /** The rows a parquet-only client gets for `sql`, sorted by `key`. */
+  private def parquetOnlyRows(url: String, sql: String, key: String) = {
+    val resp = postSync(url, sql, ParquetType)
+    assert(resp.statusCode() == 200)
+    assert(resp.headers().firstValue("Content-Type").get == ParquetType)
+    val f = java.nio.file.Files.createTempFile("graft_spec_", ".parquet")
+    java.nio.file.Files.write(f, resp.body())
+    try spark.read.parquet(f.toString).orderBy(key).collect().toSeq
+    finally java.nio.file.Files.delete(f)
+  }
+
+  /** Did the fetch decode an Arrow body in memory rather than scan a
+    * parquet file? */
+  private def decodedInMemory(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.inputFiles.isEmpty
+
+  private def withArrowCap[A](rows: Int)(f: => A): A = {
+    sys.props("graft.arrow.maxRows") = rows.toString
+    try f finally sys.props.remove("graft.arrow.maxRows")
+  }
+
+  private def syncFetch(url: String, sql: String) =
+    RelayClient.syncFetch(spark, url, sql, user = None, viaRelay = "",
+      visited = Set.empty, withProvenance = false)
 
   /** Start a relay process surface over `mesh`/`site`; run `f` against it. */
   private def withServer[A](mesh: Mesh, site: String,
@@ -706,9 +750,12 @@ class TransportSpec extends AnyFunSuite {
       Row(null, null, null, null, null, null, null, null, null, null))
     val out = new java.io.ByteArrayOutputStream()
     graft.transport.ArrowCodec.write(schema, rows.iterator, out, batchSize = 1)
-    val (gotSchema, got) = graft.transport.ArrowCodec.read(
-      new java.io.ByteArrayInputStream(out.toByteArray))
-    assert(gotSchema == schema)
+    // decoded the way a sync fetch decodes: into in-memory rows
+    val (df, n) = org.apache.spark.sql.graft.ColumnBridge.fromArrowStream(
+      spark, out.toByteArray)
+    assert(n == 2)
+    assert(df.schema == schema)
+    val got = df.collect()
     assert(got.length == 2)
     // binary needs deep comparison; compare the rest structurally
     assert(got(0).toSeq.dropRight(1) == rows(0).toSeq.dropRight(1))
@@ -726,24 +773,67 @@ class TransportSpec extends AnyFunSuite {
   test("arrow wire negotiation: do_get body equals the parquet result; cap enforced") {
     withServer(betaMesh(), "beta") { server =>
       val sql = "SELECT doc_id, lang, n_chars FROM documents ORDER BY doc_id"
-      val viaArrow = RelayClient.syncFetchArrow(spark, server.url, sql,
-        user = None, viaRelay = "", visited = Set.empty, withProvenance = false)
-      val viaParquet = RelayClient.syncFetch(spark, server.url, sql,
-        user = None, viaRelay = "", visited = Set.empty, withProvenance = false)
-      assert(viaArrow.schema.map(f => (f.name, f.dataType)) ==
-        viaParquet.schema.map(f => (f.name, f.dataType)))
-      assert(viaArrow.orderBy("doc_id").collect().toSeq ==
-        viaParquet.orderBy("doc_id").collect().toSeq)
-      // past the row cap the server refuses and points at the parquet path
-      sys.props("graft.arrow.maxRows") = "3"
-      try {
-        val err = intercept[RelayClient.RelayException] {
-          RelayClient.syncFetchArrow(spark, server.url, sql,
-            user = None, viaRelay = "", visited = Set.empty,
-            withProvenance = false)
-        }
-        assert(err.getMessage.contains("413"))
-      } finally sys.props.remove("graft.arrow.maxRows")
+      val viaArrow = syncFetch(server.url, sql)
+      assert(decodedInMemory(viaArrow))
+      val parquetOnly = parquetOnlyRows(server.url, sql, "doc_id")
+      assert(viaArrow.orderBy("doc_id").collect().toSeq == parquetOnly)
+      // past the row cap the negotiated fetch falls back to parquet, and
+      // a caller accepting only Arrow is refused with 413
+      withArrowCap(3) {
+        val resp = postSync(server.url, sql, RelayClient.SyncAccept)
+        assert(resp.headers().firstValue("Content-Type").get == ParquetType)
+        val fallback = syncFetch(server.url, sql)
+        assert(!decodedInMemory(fallback))
+        assert(fallback.orderBy("doc_id").collect().toSeq == parquetOnly)
+        val arrowOnly = postSync(server.url, sql, graft.transport.ArrowCodec.ContentType)
+        assert(arrowOnly.statusCode() == 413)
+      }
+    }
+  }
+
+  test("negotiated wire hop answers a DECIMAL entity in parquet; Arrow-only callers get 406") {
+    import org.apache.spark.sql.types.{DecimalType, LongType}
+    val prices = Entity("prices", Seq(
+      Information("doc_id", LongType), Information("price", DecimalType(12, 2))))
+    val src = DataSource(
+      id = "prices_src",
+      sourceSql = "SELECT * FROM raw_documents",
+      mappings = Seq(FieldMapping("doc_id", "doc_id"),
+        FieldMapping("price", "n_chars", Transformation("{v} / 100"))),
+      defaultPermission = SourcePermission(Set("doc_id", "n_chars"), "true"))
+    val mesh = Mesh(Map("beta" -> Site("beta",
+      entities = Map("prices" -> prices),
+      localSources = Map("prices" -> Seq(src)))))
+    withServer(mesh, "beta") { server =>
+      val sql = "SELECT doc_id, price FROM prices"
+      val resp = postSync(server.url, sql, RelayClient.SyncAccept)
+      assert(resp.statusCode() == 200)
+      assert(resp.headers().firstValue("Content-Type").get == ParquetType)
+      val fetched = syncFetch(server.url, sql)
+      assert(!decodedInMemory(fetched))
+      assert(fetched.schema("price").dataType == DecimalType(12, 2))
+      assert(fetched.orderBy("doc_id").collect().toSeq ==
+        parquetOnlyRows(server.url, sql, "doc_id"))
+      val arrowOnly = postSync(server.url, sql, graft.transport.ArrowCodec.ContentType)
+      assert(arrowOnly.statusCode() == 406)
+      assert(new String(arrowOnly.body(), "UTF-8").contains("price"))
+    }
+  }
+
+  test("resolving over an endpoint peer leaves no wire temp file behind") {
+    withServer(betaMesh(), "beta") { server =>
+      val stub = RelayClient.catalogSite(server.url)
+      val tmpDir = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+      def wireFiles(): Set[String] = {
+        val s = java.nio.file.Files.list(tmpDir)
+        try s.iterator().asScala.map(_.getFileName.toString)
+          .filter(_.startsWith("graft_wire_")).toSet
+        finally s.close()
+      }
+      val before = wireFiles()
+      val wired = EntityResolver.resolve(spark, alphaMesh(stub), "alpha", "documents")
+      assert(wired.count() == spark.table("raw_documents").count())
+      assert(wireFiles() -- before == Set.empty[String])
     }
   }
 

@@ -309,11 +309,12 @@ object EntityResolver {
               // remote relay, `core/src/execute/map_remote.rs` semantics);
               // identity, user, and the visited set cross in headers, and
               // the result comes back as an Arrow stream decoded into
-              // in-memory rows (parquet past the peer's Arrow row cap or
-              // for types the codec does not carry). The fetch happens at
-              // resolve time — the reference's get_flight_info + do_get
-              // are likewise issued when the scan is planned — so the
-              // plan holds the peer's rows as of this call.
+              // in-memory rows (parquet past the peer's wire Arrow bound
+              // or row cap, or for types the codec does not carry), so
+              // only a small result is held in memory here. The fetch
+              // happens at resolve time — the reference's get_flight_info
+              // + do_get are likewise issued when the scan is planned —
+              // so the plan holds the peer's rows as of this call.
               val templated = graft.transport.RelayClient.syncFetch(
                 spark, url, rm.renderSql(rm.remoteEntity), user,
                 viaRelay = siteName, visited = visited + rm.peer,

@@ -24,8 +24,9 @@ import graft.catalog.{ArrowLikeType, Entity, Information, Site}
   * the `X-Graft-Token` shared secret instead. A sync fetch negotiates
   * the Arrow IPC stream (the Flight do_get body, see [[ArrowCodec]]) and
   * decodes it in memory into Spark's internal rows; the peer answers parquet
-  * instead when the result is past its Arrow row cap or holds a type the
-  * codec does not carry. A parquet body (that fallback, async results)
+  * instead when the result is past its wire Arrow bound (a few MB of rows,
+  * `RelayServer.WireArrowMaxBytes`) or its Arrow row cap, or holds a type
+  * the codec does not carry. A parquet body (that fallback, async results)
   * streams through a temp file that Spark then scans lazily (and
   * distributed — the file is splittable), so no bulk result ever
   * materializes on the client driver.

@@ -8,6 +8,7 @@ import java.nio.file.{Files, Path, Paths}
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graft.ResultRows
 
 import graft.catalog.ArrowLikeType
 import graft.mesh.{EntityResolver, MeshSession, QueryService}
@@ -40,9 +41,9 @@ import graft.validation.SqlValidator
   *   - `POST /query/sync`                   {sql, user?, with_provenance?}
   *     → the Arrow IPC stream when the caller accepts it, else parquet
   *     bytes; a caller accepting both (a peer relay's wire hop) gets
-  *     parquet only for a result past the Arrow row cap or with a type the
-  *     codec does not carry (the Flight do_get path; relay identity and
-  *     the visited-relay cycle guard cross in
+  *     parquet for a result past `WireArrowMaxBytes` or the Arrow row cap,
+  *     or with a type the codec does not carry (the Flight do_get path;
+  *     relay identity and the visited-relay cycle guard cross in
   *     `X-Graft-Relay`/`X-Graft-Visited`)
   *   - `PUT  /ingest/{id}/{branch}`         parquet bytes pushed by an
   *     executor relay (do_put)
@@ -350,9 +351,10 @@ final class RelayServer(
     * the format the caller accepts. Negotiating `Accept:
     * application/vnd.apache.arrow.stream` (or sending `format: "arrow"`)
     * asks for the Arrow IPC stream a Flight do_get body actually is (see
-    * [[ArrowCodec]]); a caller that also lists parquet gets parquet when
-    * the result cannot go as Arrow, one that does not gets the 406 or
-    * 413; a caller that asks for no Arrow gets parquet. */
+    * [[ArrowCodec]]); a caller that also lists parquet (a peer relay's
+    * wire hop) is answered by [[negotiate]], one that does not gets the
+    * 406 or 413 when the result cannot go as Arrow; a caller that asks
+    * for no Arrow gets parquet. */
   private def syncQuery(ex: HttpExchange, auth: Auth): Unit = {
     val body = mapper.readTree(ex.getRequestBody)
     val sql = reqField(body, "sql")
@@ -364,17 +366,22 @@ final class RelayServer(
     val wantsArrow = accept.contains("arrow") ||
       Option(body.get("format")).exists(_.asText("") == "arrow")
     if (!wantsArrow) respondParquet(ex, df)
+    else if (accept.contains("parquet")) negotiate(ex, df)
     else encodeArrow(df) match {
       case Right(bytes) => respond(ex, 200, ArrowCodec.ContentType, bytes)
-      case Left(_) if accept.contains("parquet") => respondParquet(ex, df)
       case Left((code, msg)) => respond(ex, code, "application/json", errJson(msg))
     }
   }
 
+  /** The Arrow row cap: past it a result is the splittable parquet's to
+    * carry. */
+  private def arrowRowCap: Long =
+    sys.props.get("graft.arrow.maxRows")
+      .orElse(sys.env.get("GRAFT_ARROW_MAX_ROWS")).getOrElse("1000000").toLong
+
   /** Serialize a result as one Arrow IPC stream, or say why it cannot
     * go as one: the HTTP status and message an Arrow-only caller gets.
-    * Driver-side like the NDJSON export, and capped the same way: past
-    * the cap the result is the splittable parquet's to carry.
+    * Driver-side like the NDJSON export, and capped the same way.
     *
     * Decided BEFORE any response byte is committed: an unsupported
     * column type is 406 (the codec's type set is checked against the
@@ -384,8 +391,7 @@ final class RelayServer(
     * toLocalIterator execution both counts and encodes the rows. */
   private def encodeArrow(df: DataFrame): Either[(Int, String), Array[Byte]] = {
     import scala.jdk.CollectionConverters._
-    val cap = sys.props.get("graft.arrow.maxRows")
-      .orElse(sys.env.get("GRAFT_ARROW_MAX_ROWS")).getOrElse("1000000").toLong
+    val cap = arrowRowCap
     val bad = df.schema.fields.filterNot(f => ArrowCodec.supports(f.dataType))
     if (bad.nonEmpty)
       return Left((406, "arrow transport does not carry " +
@@ -403,6 +409,29 @@ final class RelayServer(
       Left((413, s"result exceeds the arrow cap of $cap rows; " +
         "negotiate parquet instead or raise GRAFT_ARROW_MAX_ROWS"))
     else Right(buf.toByteArray)
+  }
+
+  /** Answer a caller that accepts both formats from ONE execution of the
+    * query: Arrow when the result fits in [[RelayServer.WireArrowMaxBytes]]
+    * and the row cap, else parquet. The tasks hand back the rows of a
+    * result that fits and write a bulk one to parquet themselves (see
+    * `ResultRows.rowsOrParquet`), so the query never runs twice and at
+    * most the bound's worth of rows reaches this process's driver. A
+    * schema the codec does not carry goes straight to the parquet write. */
+  private def negotiate(ex: HttpExchange, df: DataFrame): Unit = {
+    if (!df.schema.fields.forall(f => ArrowCodec.supports(f.dataType)))
+      return respondParquet(ex, df)
+    // created by the parquet writers only if the answer is parquet
+    val tmp = Paths.get(System.getProperty("java.io.tmpdir"),
+      s"graft_relay_out_${java.util.UUID.randomUUID()}")
+    try ResultRows.rowsOrParquet(
+        df, RelayServer.WireArrowMaxBytes, arrowRowCap, tmp) match {
+      case Left(rows) =>
+        val buf = new java.io.ByteArrayOutputStream()
+        ArrowCodec.write(df.schema, rows.iterator.map(ResultRows.toExternal(df.schema)), buf)
+        respond(ex, 200, ArrowCodec.ContentType, buf.toByteArray)
+      case Right(file) => sendParquet(ex, file)
+    } finally deleteRecursively(tmp)
   }
 
   /** PUT /ingest/{id}/{branch}: do_put — an executor relay pushes a
@@ -471,11 +500,7 @@ final class RelayServer(
     try {
       df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       partFile(tmp) match {
-        case Some(p) =>
-          ex.getResponseHeaders.set("Content-Type", "application/vnd.apache.parquet")
-          ex.sendResponseHeaders(200, Files.size(p))
-          val out = ex.getResponseBody
-          try Files.copy(p, out) finally out.close()
+        case Some(p) => sendParquet(ex, p)
         case None =>
           ex.getResponseHeaders.set("X-Graft-Empty",
             java.util.Base64.getEncoder.encodeToString(
@@ -483,6 +508,13 @@ final class RelayServer(
           respond(ex, 200, "application/vnd.apache.parquet", Array.emptyByteArray)
       }
     } finally deleteRecursively(tmp)
+  }
+
+  private def sendParquet(ex: HttpExchange, file: Path): Unit = {
+    ex.getResponseHeaders.set("Content-Type", "application/vnd.apache.parquet")
+    ex.sendResponseHeaders(200, Files.size(file))
+    val out = ex.getResponseBody
+    try Files.copy(file, out) finally out.close()
   }
 
   private def partFile(dir: Path): Option[Path] = {
@@ -554,4 +586,17 @@ object RelayServer {
     * trusted relay hop (whose origin user crosses in the body) and for
     * servers without cert auth. */
   private final case class Auth(user: Option[String])
+
+  /** The largest result, in UnsafeRow bytes, a caller accepting both
+    * formats gets as Arrow; past it the tasks write parquet. A fetched
+    * Arrow body is held in the caller's heap, a parquet one is a file
+    * scanned lazily, so the bound sits below the measured crossover.
+    * Measured on a 4-core host: sync fetches of a 15-column lineitem
+    * entity (144 UnsafeRow bytes a row) plus an aggregate over the
+    * fetched frame, the two encodings alternating in one process, 9 pairs
+    * a size, medians: Arrow 305 vs parquet 446 ms at 10k rows, 377 vs
+    * 438 ms at 56k, even at 80k (11.5 MB, 430 ms each), slower from 120k
+    * (428 vs 398 ms; 806 vs 518 ms at 240k). 8 MB is ~58k such rows; a
+    * mesh result of the relay-sync benchmark is 10-20k rows. */
+  private[graft] val WireArrowMaxBytes: Long = 8L << 20
 }

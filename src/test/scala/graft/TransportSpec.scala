@@ -64,15 +64,60 @@ class TransportSpec extends AnyFunSuite {
 
   private val ParquetType = "application/vnd.apache.parquet"
 
-  /** The rows a parquet-only client gets for `sql`, sorted by `key`. */
-  private def parquetOnlyRows(url: String, sql: String, key: String) = {
+  /** Column names and types of a frame, as an answer's schema is compared. */
+  private def fieldsOf(df: org.apache.spark.sql.DataFrame) =
+    df.schema.map(f => (f.name, f.dataType))
+
+  /** The schema and the rows (sorted by `key`) a parquet-only client gets
+    * for `sql`. */
+  private def parquetOnlyAnswer(url: String, sql: String, key: String) = {
     val resp = postSync(url, sql, ParquetType)
     assert(resp.statusCode() == 200)
     assert(resp.headers().firstValue("Content-Type").get == ParquetType)
     val f = java.nio.file.Files.createTempFile("graft_spec_", ".parquet")
     java.nio.file.Files.write(f, resp.body())
-    try spark.read.parquet(f.toString).orderBy(key).collect().toSeq
-    finally java.nio.file.Files.delete(f)
+    try {
+      val df = spark.read.parquet(f.toString)
+      (fieldsOf(df), df.orderBy(key).collect().toSeq)
+    } finally java.nio.file.Files.delete(f)
+  }
+
+  /** Run `f` and return its value with the funcNames of the SQL executions
+    * that ran meanwhile, leaving out temp-view registrations (a relay
+    * registers the entity views a request reads). The client's `[wire]`
+    * diagnostic job is turned off for the duration, so with a parquet or
+    * Arrow fetch inside `f` only the serving relay's query runs are
+    * counted. A sentinel action run after `f` marks the end: the listener
+    * bus delivers in order, so once its event arrives every earlier one
+    * has. */
+  private def withExecutions[A](f: => A): (A, Seq[String]) = {
+    import org.apache.spark.sql.execution.QueryExecution
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        seen.add((funcName, qe)): Unit
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
+        seen.add((funcName, qe)): Unit
+    }
+    spark.listenerManager.register(listener)
+    sys.props("graft.wire.quiet") = "1"
+    try {
+      val a = f
+      val sentinel = spark.range(1)
+      sentinel.collect()
+      val deadline = System.currentTimeMillis() + 30000
+      while (!seen.asScala.exists(_._2 eq sentinel.queryExecution) &&
+          System.currentTimeMillis() < deadline) Thread.sleep(20)
+      val ran = seen.asScala.toSeq
+      assert(ran.exists(_._2 eq sentinel.queryExecution), "listener bus did not drain")
+      (a, ran.takeWhile(!_._2.eq(sentinel.queryExecution)).collect {
+        case (name, qe) if !qe.logical.isInstanceOf[
+          org.apache.spark.sql.execution.command.CreateViewCommand] => name
+      })
+    } finally {
+      sys.props.remove("graft.wire.quiet")
+      spark.listenerManager.unregister(listener)
+    }
   }
 
   /** Did the fetch decode an Arrow body in memory rather than scan a
@@ -773,17 +818,22 @@ class TransportSpec extends AnyFunSuite {
   test("arrow wire negotiation: do_get body equals the parquet result; cap enforced") {
     withServer(betaMesh(), "beta") { server =>
       val sql = "SELECT doc_id, lang, n_chars FROM documents ORDER BY doc_id"
-      val viaArrow = syncFetch(server.url, sql)
+      val (viaArrow, arrowRuns) = withExecutions(syncFetch(server.url, sql))
       assert(decodedInMemory(viaArrow))
-      val parquetOnly = parquetOnlyRows(server.url, sql, "doc_id")
+      assert(arrowRuns.size == 1, arrowRuns)
+      val (parquetFields, parquetOnly) = parquetOnlyAnswer(server.url, sql, "doc_id")
+      assert(fieldsOf(viaArrow) == parquetFields)
       assert(viaArrow.orderBy("doc_id").collect().toSeq == parquetOnly)
-      // past the row cap the negotiated fetch falls back to parquet, and
-      // a caller accepting only Arrow is refused with 413
+      // past the row cap the negotiated fetch falls back to parquet from
+      // the same single execution of the query, and a caller accepting
+      // only Arrow is refused with 413
       withArrowCap(3) {
         val resp = postSync(server.url, sql, RelayClient.SyncAccept)
         assert(resp.headers().firstValue("Content-Type").get == ParquetType)
-        val fallback = syncFetch(server.url, sql)
+        val (fallback, fallbackRuns) = withExecutions(syncFetch(server.url, sql))
         assert(!decodedInMemory(fallback))
+        assert(fallbackRuns.size == 1, fallbackRuns)
+        assert(fieldsOf(fallback) == parquetFields)
         assert(fallback.orderBy("doc_id").collect().toSeq == parquetOnly)
         val arrowOnly = postSync(server.url, sql, graft.transport.ArrowCodec.ContentType)
         assert(arrowOnly.statusCode() == 413)
@@ -812,11 +862,37 @@ class TransportSpec extends AnyFunSuite {
       val fetched = syncFetch(server.url, sql)
       assert(!decodedInMemory(fetched))
       assert(fetched.schema("price").dataType == DecimalType(12, 2))
-      assert(fetched.orderBy("doc_id").collect().toSeq ==
-        parquetOnlyRows(server.url, sql, "doc_id"))
+      val (parquetFields, parquetOnly) = parquetOnlyAnswer(server.url, sql, "doc_id")
+      assert(fieldsOf(fetched) == parquetFields)
+      assert(fetched.orderBy("doc_id").collect().toSeq == parquetOnly)
       val arrowOnly = postSync(server.url, sql, graft.transport.ArrowCodec.ContentType)
       assert(arrowOnly.statusCode() == 406)
       assert(new String(arrowOnly.body(), "UTF-8").contains("price"))
+    }
+  }
+
+  test("negotiated wire hop answers a result past the Arrow byte bound in parquet, from one execution") {
+    // range(n) splits into contiguous id ranges: the first quarter carries
+    // wide rows (over the bound by itself, so its task writes parquet), the
+    // rest narrow rows that come back to the driver; the answer is one
+    // parquet file in id order
+    val n = 2 * RelayServer.WireArrowMaxBytes / 256
+    val src = DataSource(
+      id = "skewed_docs",
+      sourceSql = s"""SELECT id AS doc_id, repeat('x', IF(id < $n / 4, 1024, 8)) AS text,
+                     |'en' AS lang, 'gen' AS source, 8L AS n_chars
+                     |FROM range($n)""".stripMargin,
+      mappings = identityDocMappings,
+      defaultPermission = SourcePermission(docCols, "true"))
+    withServer(betaMesh(src), "beta") { server =>
+      val sql = "SELECT doc_id, text, n_chars FROM documents"
+      val (fetched, runs) = withExecutions(syncFetch(server.url, sql))
+      assert(!decodedInMemory(fetched))
+      assert(runs.size == 1, runs)
+      val (parquetFields, parquetOnly) = parquetOnlyAnswer(server.url, sql, "doc_id")
+      assert(parquetOnly.size == n)
+      assert(fieldsOf(fetched) == parquetFields)
+      assert(fetched.collect().toSeq == parquetOnly)
     }
   }
 

@@ -15,13 +15,12 @@ object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame = {
     val df = Fixtures.lineitemView(spark, "/root/testdata/sf0.001")
-    df.createOrReplaceTempView("lineitem_entity")
-    graft.mesh.ViewEpoch.noteShadow()
-    spark.sql(
+    org.apache.spark.sql.graft.ColumnBridge.bind(spark,
       """SELECT returnflag, linestatus, round(sum(quantity), 2) AS sum_qty,
         |       count(*) AS count_order
         |FROM lineitem_entity GROUP BY returnflag, linestatus
-        |ORDER BY returnflag, linestatus""".stripMargin)
+        |ORDER BY returnflag, linestatus""".stripMargin,
+      Map("lineitem_entity" -> df))
   }
 
   /** One entry per implemented operator from SURVEY.md §2. */

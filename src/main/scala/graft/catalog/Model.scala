@@ -111,7 +111,7 @@ final case class FieldMapping(
 
 /** Physical file-backed dataset (the FileDirectory connection type,
   * `core/src/execute/data_stores/file_directory.rs:57-141`): read with the
-  * Spark reader and registered as `viewName` for the source SQL. */
+  * Spark reader and bound as `viewName` for the source SQL. */
 final case class FileSource(
     format: String, // parquet | csv | json
     path: String,
@@ -143,7 +143,7 @@ final case class JdbcSource(
 
 /** One queryable dataset within a physical connection
   * (`core/src/model/data_stores/mod.rs:39-45`). `sourceSql` is a SQL snippet
-  * over `viewName` (registered from `fileSource` if present, otherwise a
+  * over `viewName` (bound from `fileSource` if present, otherwise a
   * pre-registered physical temp view), substituted as a derived table. */
 final case class DataSource(
     id: String,
@@ -175,13 +175,10 @@ final case class RemoteEntityMapping(
     remoteEntity: String,
     sqlTemplate: String = "SELECT * FROM {remote}",
     infoMappings: Seq[RemoteInfoMapping]) {
-  /** Substitute the resolved remote relation name into the template. */
+  /** Substitute the remote relation name for `{remote}` in the template;
+    * a template naming the remote entity directly is used as written. */
   def renderSql(remoteRelation: String): String =
-    if (sqlTemplate.contains("{remote}"))
-      sqlTemplate.replace("{remote}", remoteRelation)
-    else
-      sqlTemplate.replaceAll(s"\\b${java.util.regex.Pattern.quote(remoteEntity)}\\b",
-        java.util.regex.Matcher.quoteReplacement(remoteRelation))
+    sqlTemplate.replace("{remote}", remoteRelation)
 }
 
 /** A Relay node: catalog of entities + local sources + peered remotes.

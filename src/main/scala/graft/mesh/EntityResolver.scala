@@ -1,8 +1,7 @@
 package graft.mesh
 
-import java.util.concurrent.atomic.AtomicLong
-
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -35,8 +34,6 @@ import graft.catalog._
 object EntityResolver {
   val SourceRelayCol = "_source_relay_"
   val SourceIdCol    = "_source_id_"
-
-  private val viewCounter = new AtomicLong(0)
 
   /** Resolve `entityName` as seen from `siteName` for `user`.
     *
@@ -114,8 +111,8 @@ object EntityResolver {
     * (`flight_server/src/flight.rs:194-309`), refined by which remote hops
     * actually keep each provenance column flowing. No data is scanned: a hop
     * whose `sqlTemplate` drops `_source_relay_` and/or `_source_id_` (no
-    * `SELECT *`) is detected by analyzing the rendered template against a
-    * schema-only probe view, exactly mirroring `remoteMappedDF`'s per-column
+    * `SELECT *`) is detected by analyzing the rendered template over an
+    * empty frame of the remote schema, exactly mirroring `remoteMappedDF`'s per-column
     * runtime check; each dropped column degrades to `None` independently, so
     * a template keeping only the relay yields `(Some(relay), None)` branches
     * and one dropping both collapses its subtree to `(None, None)`. Sources
@@ -181,10 +178,11 @@ object EntityResolver {
     * `remoteInfoProjection`). The CTE carries the remote name because the
     * peer's validator counts CTE-alias references like sqlparser-rs
     * `visit_relations` does — a fresh alias would read as a second entity —
-    * so when local and remote names differ, the user text is re-pointed at
-    * the remote name by the same word-boundary substitution `renderSql`
-    * itself uses. Inside the (non-recursive) CTE body the self-name resolves
-    * to the peer's real entity view, standard SQL scoping. */
+    * so when local and remote names differ, the user text's relation
+    * references are re-pointed at the remote name ([[repointRelations]]);
+    * string literals and columns named like the entity are left alone.
+    * Inside the (non-recursive) CTE body the self-name resolves to the
+    * peer's real entity, standard SQL scoping. */
   private[graft] def mapRemoteRequestSql(
       spark: SparkSession,
       mesh: Mesh,
@@ -203,12 +201,7 @@ object EntityResolver {
     // which columns does the rendered template actually emit? (schema-only
     // probe — mirrors remoteInfoProjection's runtime availability check)
     val remoteSchema = mesh.site(rm.peer).entities(rm.remoteEntity).schema
-    val probeName = s"__graft_probe_${viewCounter.incrementAndGet()}"
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], remoteSchema)
-      .createOrReplaceTempView(probeName)
-    val available =
-      try spark.sql(rm.renderSql(probeName)).columns.toSet
-      finally spark.catalog.dropTempView(probeName)
+    val available = templateColumns(spark, rm, remoteSchema)
     val proj = entity.informations.map { info =>
       rm.infoMappings.find(_.localInfo == info.name) match {
         case Some(m) if available.contains(m.remoteInfo) =>
@@ -219,31 +212,81 @@ object EntityResolver {
     val hop = s"SELECT $proj FROM (${rm.renderSql(rm.remoteEntity)}) AS __graft_hop"
     val pointed =
       if (sameName) userSql
-      else userSql.replaceAll(
-        s"(?i)\\b${java.util.regex.Pattern.quote(entity.name)}\\b",
-        java.util.regex.Matcher.quoteReplacement(rm.remoteEntity))
+      else repointRelations(spark, userSql, entity.name, rm.remoteEntity)
     val trimmed = pointed.trim
     if (trimmed.matches("(?is)^with\\b.*"))
       s"WITH ${rm.remoteEntity} AS ($hop), ${trimmed.substring(4).trim}"
     else s"WITH ${rm.remoteEntity} AS ($hop) $trimmed"
   }
 
+  /** Re-point every relation reference to `from` in `sqlText` at `to`,
+    * using the text spans the parser records for each relation: string
+    * literals, columns, CTE names spelled like `from`, and references to
+    * such a CTE keep their text (the peer's validator then refuses the
+    * second name loudly instead of the hop silently skipping the CTE).
+    * An unaliased reference becomes `to AS from`, so qualified columns
+    * (`from.col`) still resolve. A text the session parser reads only
+    * after the dialect bridges is re-pointed in its bridged form. */
+  private def repointRelations(
+      spark: SparkSession, sqlText: String, from: String, to: String): String = {
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, UnresolvedWith}
+    val parser = spark.sessionState.sqlParser
+    val (text, plan) =
+      try (sqlText, parser.parsePlan(sqlText))
+      catch {
+        case _: org.apache.spark.sql.catalyst.parser.ParseException =>
+          val bridged = graft.validation.SqlValidator.preprocess(sqlText)
+          (bridged, parser.parsePlan(bridged))
+      }
+    // (start, stop, aliased) of each reference to `from`; a reference a
+    // user CTE named like `from` shadows reads that CTE and keeps its text
+    val spans = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Boolean)]
+    def walk(p: LogicalPlan, aliased: Boolean, shadowed: Boolean): Unit = p match {
+      case r: UnresolvedRelation =>
+        if (!shadowed && r.multipartIdentifier.size == 1 &&
+            r.multipartIdentifier.head.equalsIgnoreCase(from))
+          for (a <- r.origin.startIndex; b <- r.origin.stopIndex)
+            spans += ((a, b, aliased))
+      case w: UnresolvedWith =>
+        val inBody = w.cteRelations.foldLeft(shadowed) { case (sh, (name, sub, _)) =>
+          walk(sub.child, aliased = false, sh)
+          sh || name.equalsIgnoreCase(from)
+        }
+        walk(w.child, aliased = false, inBody)
+      case _ =>
+        p.children.foreach(c => walk(c, p.isInstanceOf[SubqueryAlias], shadowed))
+        p.expressions.foreach(_.foreach {
+          case sq: org.apache.spark.sql.catalyst.expressions.SubqueryExpression =>
+            walk(sq.plan, aliased = false, shadowed)
+          case _ =>
+        })
+    }
+    walk(plan, aliased = false, shadowed = false)
+    spans.distinct.sortBy(-_._1).foldLeft(text) { case (t, (a, b, aliased)) =>
+      t.substring(0, a) + (if (aliased) to else s"$to AS $from") + t.substring(b + 1)
+    }
+  }
+
+  /** The columns `rm`'s template emits over a remote entity of
+    * `remoteSchema`: Catalyst analysis over an empty frame, no job runs. */
+  private def templateColumns(spark: SparkSession, rm: RemoteEntityMapping,
+      remoteSchema: StructType): Set[String] = {
+    val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], remoteSchema)
+    ColumnBridge.bind(spark, rm.renderSql(rm.remoteEntity),
+      Map(rm.remoteEntity -> empty)).columns.toSet
+  }
+
   /** Plan-only check: which provenance columns does `rm.sqlTemplate` keep?
-    * Analyzes the rendered template over an empty probe view carrying the
-    * remote entity schema + provenance columns — Catalyst analysis only,
-    * no job runs. Returns (keeps `_source_relay_`, keeps `_source_id_`). */
+    * Analyzes the rendered template over the remote entity schema +
+    * provenance columns ([[templateColumns]]). Returns (keeps
+    * `_source_relay_`, keeps `_source_id_`). */
   private def templateProvenance(
       spark: SparkSession, mesh: Mesh, rm: RemoteEntityMapping): (Boolean, Boolean) = {
     val remoteSchema = mesh.site(rm.peer).entities(rm.remoteEntity).schema
-    val probeSchema = StructType(remoteSchema.fields ++ Seq(
-      StructField(SourceRelayCol, StringType), StructField(SourceIdCol, StringType)))
-    val probeName = s"__graft_probe_${viewCounter.incrementAndGet()}"
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], probeSchema)
-      .createOrReplaceTempView(probeName)
-    try {
-      val cols = spark.sql(rm.renderSql(probeName)).columns.toSet
-      (cols.contains(SourceRelayCol), cols.contains(SourceIdCol))
-    } finally spark.catalog.dropTempView(probeName)
+    val cols = templateColumns(spark, rm, StructType(remoteSchema.fields ++ Seq(
+      StructField(SourceRelayCol, StringType), StructField(SourceIdCol, StringType))))
+    (cols.contains(SourceRelayCol), cols.contains(SourceIdCol))
   }
 
   /** A RemoteEntityMapping whose peer is absent from the mesh (an offline
@@ -374,13 +417,14 @@ object EntityResolver {
       // `core/src/execute/mod.rs:150-191`); a direct request has none
       viaRelay.flatMap(ds.relayPermissions.get))
 
-    // file-backed sources (FileDirectory runner, S1): read + register the
-    // physical relation the source SQL refers to. JSON nested objects/
-    // arrays surface as their serialized TEXT: the reference's DataField
-    // `$.`-path contract addresses a JSON document stored in a column
-    // (`core/src/model/data_stores/mod.rs:55-62`), so `get_json_object`
-    // must see a string — and the DSv2 connector's raw view agrees.
-    ds.fileSource.foreach { fs =>
+    // file-backed sources (FileDirectory runner, S1): read the physical
+    // relation and bind it under the name the source SQL refers to. JSON
+    // nested objects/arrays surface as their serialized TEXT: the
+    // reference's DataField `$.`-path contract addresses a JSON document
+    // stored in a column (`core/src/model/data_stores/mod.rs:55-62`), so
+    // `get_json_object` must see a string — and the DSv2 connector's raw
+    // view agrees.
+    val fileView = ds.fileSource.map { fs =>
       val effective =
         if (fs.format == "csv") FileSource.csvEffectiveOptions(fs.options)
         else fs.options
@@ -396,25 +440,7 @@ object EntityResolver {
             case _ => col(f.name)
           }
         }.toSeq: _*)
-      flattened.createOrReplaceTempView(ds.viewName.getOrElse(ds.id))
-      // no fixture source id collides with a shared view name today, but a
-      // catalog whose viewName/id matches one must bump the epoch or the
-      // epoch-guarded helpers would leave the shadow unrepaired
-      ViewEpoch.noteShadow()
-    }
-
-    // view-backed sources whose SQL references a relation named like the
-    // entity would silently read a previously-registered entity view after
-    // a MeshSession query (ACL/transforms applied twice, possibly under
-    // another user) — refuse loudly and point at the raw_-prefix convention
-    if (ds.fileSource.isEmpty && ds.jdbcSource.isEmpty) {
-      val rels = graft.validation.SqlValidator.relationNamesOf(ds.sourceSql, spark)
-      if (rels.contains(entity.name))
-        throw new IllegalStateException(
-          s"source ${ds.id} reads relation '${entity.name}', which collides with " +
-            s"the entity name and would be shadowed by a registered entity view; " +
-            "register the physical relation under a distinct name (e.g. " +
-            s"'raw_${entity.name}') and reference that in source_sql")
+      ds.viewName.getOrElse(ds.id) -> flattened
     }
 
     // delegated-engine seam (S3/S4): `sourceSql` executes ON the external
@@ -434,7 +460,8 @@ object EntityResolver {
           .load()
           .where(expr(perm.allowedRows))
       case None =>
-        spark.sql(ds.sourceSql).where(expr(perm.allowedRows))
+        ColumnBridge.bind(spark, ds.sourceSql, fileView.toMap)
+          .where(expr(perm.allowedRows))
     }
 
     val projected = entity.informations.map { info =>
@@ -466,14 +493,8 @@ object EntityResolver {
       rm: RemoteEntityMapping,
       remoteDF: DataFrame,
       withProvenance: Boolean): DataFrame = {
-    val viewName = (s"__graft_remote_${rm.peer}_${rm.remoteEntity}_" +
-      viewCounter.incrementAndGet()).replaceAll("[^A-Za-z0-9_]", "_")
-    remoteDF.createOrReplaceTempView(viewName)
-    ViewEpoch.noteShadow() // counter-suffixed, but shadow-proof is cheap
-    // spark.sql analyzes eagerly, so the captured plan no longer needs the
-    // view — drop it to keep a long-running session's catalog bounded
-    val templated = spark.sql(rm.renderSql(viewName))
-    spark.catalog.dropTempView(viewName)
+    val templated = ColumnBridge.bind(spark, rm.renderSql(rm.remoteEntity),
+      Map(rm.remoteEntity -> remoteDF))
     remoteInfoProjection(entity, rm, templated, withProvenance)
   }
 

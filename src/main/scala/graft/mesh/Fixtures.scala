@@ -29,7 +29,11 @@ object Fixtures {
     "region", "nation", "customer", "supplier", "part", "orders", "lineitem",
     "events", "documents", "embeddings")
 
-  /** Register the raw physical parquet tables as temp views.
+  /** Register the raw physical parquet tables as temp views, once per
+    * (session, sfDir): under their bare names and `raw_`-prefixed (source
+    * SQL reads the prefixed names). Mesh and query paths bind entities by
+    * name for one query and register nothing, so these views are never
+    * shadowed and need no re-assert.
     *
     * `events.parquet` stores `ts` as parquet TIMESTAMP(NANOS), which Spark's
     * vectorized reader rejects; read it as nanos-long and truncate to
@@ -43,16 +47,8 @@ object Fixtures {
     // session that can see `documents` can call vec_dot/word_ngrams
     graft.functions.VectorFunctions.register(spark)
     graft.functions.TextFunctions.register(spark)
-    // DataFrame construction (parquet-footer reads) memoizes per
-    // (session, sfDir), but the temp-view registrations re-assert on EVERY
-    // call: a MeshSession query legitimately registers an entity view
-    // under a bare table name ('lineitem', 'documents' — the reference
-    // requires user SQL to address the entity name), and without the
-    // re-assert that ACL-scoped view would shadow the physical table for
-    // every later driver query in the session (order-dependence bug class
-    // caught by ViewIsolationSpec).
-    val dfs = rawDfLock.synchronized {
-      rawDfCache.getOrElse((spark, sfDir), {
+    rawDfLock.synchronized {
+      if (!rawDfCache.contains((spark, sfDir))) {
         rawDfCache.filterKeys(_._1 eq spark).keys.foreach(rawDfCache.remove)
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         val built = RawTables.map { t =>
@@ -69,28 +65,14 @@ object Fixtures {
                 org.apache.spark.sql.functions.col("ts")
                   .cast(org.apache.spark.sql.types.TimestampType))
             else df
+          fixed.createOrReplaceTempView(t)
+          fixed.createOrReplaceTempView(s"raw_$t")
           t -> fixed
         }
         rawDfCache.put((spark, sfDir), built)
-        built
-      })
-    }
-    // skip the ~20 catalog puts (~50 ms driver time) unless something has
-    // shadowed a shared view since the last assert for this (session, sf)
-    val epoch = ViewEpoch.current
-    if (!lastAsserted.get(spark).contains((sfDir, epoch))) {
-      dfs.foreach { case (t, df) =>
-        df.createOrReplaceTempView(t)
-        // `raw_`-prefixed alias: source SQL reads these so a bare-named
-        // entity view can never sit between source_sql and the physical data
-        df.createOrReplaceTempView(s"raw_$t")
       }
-      lastAsserted.put(spark, (sfDir, epoch))
     }
   }
-
-  private val lastAsserted =
-    scala.collection.concurrent.TrieMap.empty[SparkSession, (String, Long)]
 
   val lineitemEntity: Entity = Entity("lineitem", Seq(
     Information("orderkey", LongType),

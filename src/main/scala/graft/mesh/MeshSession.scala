@@ -11,10 +11,11 @@ import graft.validation.SqlValidator
   * reference -> execute on Catalyst.
   *
   * Where the reference rewrites SQL text per source and ships it to backend
-  * engines (`core/src/execute/map_local.rs:24-36`), this registers the
-  * resolved entity DataFrame as a temp view under the entity's name, so the
-  * user's SQL runs unchanged and Catalyst performs pushdown into every
-  * per-source branch.
+  * engines (`core/src/execute/map_local.rs:24-36`), this binds the entity's
+  * name to the resolved entity DataFrame for the one query (an outer CTE,
+  * `ColumnBridge.bind`; the session catalog is not touched), so the user's
+  * SQL runs unchanged and Catalyst performs pushdown into every per-source
+  * branch.
   */
 class MeshSession private (
     val spark: SparkSession,
@@ -36,23 +37,24 @@ class MeshSession private (
   def mesh: graft.catalog.Mesh = meshProvider()
 
   /** Per-session analysis-plan cache (round-16): a repeated query text
-    * skips validate -> resolve -> register -> analyze when NOTHING it
-    * depends on has moved. Validity is (a) the Mesh VALUE's reference
-    * identity — the registry swaps in a new immutable Mesh on every
+    * skips validate -> resolve -> bind -> analyze when NOTHING it
+    * depends on has moved. Validity is the Mesh VALUE's reference
+    * identity: the registry swaps in a new immutable Mesh on every
     * admin upsert, so any catalog mutation invalidates every cached
-    * plan on the next query (MeshSessionSpec pins it) — and (b) the
-    * ViewEpoch, so any shared-temp-view shadow (another session's
-    * entity registration, a fixture re-assert) also re-analyzes.
+    * plan on the next query (PlanCacheSpec pins it). The entity is
+    * bound into the plan by name ([[bindEntity]]), never through the
+    * session's temp-view catalog, so no other session's work and no
+    * catalog registration can change what a cached plan reads.
     * Cached = a PLAN; every action re-optimizes and re-executes from
     * the sources. An entity whose resolution path reaches an
     * endpoint-backed peer is never cached: its plan holds the rows the
-    * peer returned at resolve time, and a change on the peer moves
-    * neither the local Mesh nor the epoch. Bounded: a serving session's
-    * distinct-text cache is capped, dropping wholesale at the cap (plans
-    * are cheap to rebuild; an LRU would be ceremony). */
+    * peer returned at resolve time, and a change on the peer does not
+    * move the local Mesh. Bounded: a serving session's distinct-text
+    * cache is capped, dropping wholesale at the cap (plans are cheap to
+    * rebuild; an LRU would be ceremony). */
   private val planCache = scala.collection.concurrent.TrieMap
     .empty[(String, Option[String], Boolean, Option[StructType]),
-      (graft.catalog.Mesh, Long, DataFrame)]
+      (graft.catalog.Mesh, DataFrame)]
   private val PlanCacheMax = 128
 
   /** Validate + execute `sqlText` as `user` against this site's catalog.
@@ -67,26 +69,15 @@ class MeshSession private (
     val key = (sqlText, user, withProvenance, returnSchema)
     val meshNow = mesh
     planCache.get(key) match {
-      case Some((m, e, df)) if (m eq meshNow) && e == ViewEpoch.current => df
+      case Some((m, df)) if m eq meshNow => df
       case _ =>
-        val entity = SqlValidator.validate(sqlText, spark)
-        if (!meshNow.site(siteName).entities.contains(entity))
-          throw SqlValidator.InvalidQuery(s"Entity $entity not found on relay $siteName")
-        val entityDF =
-          EntityResolver.resolve(spark, meshNow, siteName, entity, user, withProvenance)
-        // register + analyze atomically w.r.t. concurrent async submits that
-        // use the same shared-name view; the epoch is read under the same
-        // lock, right after our own registration bump — unchanged epoch
-        // means unchanged catalog for the next identical query
-        val (out, epoch) = QueryService.planLock.synchronized {
-          entityDF.createOrReplaceTempView(entity)
-          ViewEpoch.noteShadow()
-          (spark.sql(SqlValidator.preprocess(sqlText)), ViewEpoch.current)
-        }
+        val (entity, entityDF) = resolveFor(meshNow, sqlText, user,
+          withProvenance, viaRelay = None, alsoVisited = Set.empty)
+        val out = bindEntity(sqlText, entity, entityDF)
         val cast = returnSchema.map(EntityResolver.castToSchema(out, _)).getOrElse(out)
         if (!EntityResolver.pathReachesEndpoint(meshNow, siteName, entity)) {
           if (planCache.size >= PlanCacheMax) planCache.clear()
-          planCache.put(key, (meshNow, epoch, cast))
+          planCache.put(key, (meshNow, cast))
         }
         cast
     }
@@ -102,17 +93,30 @@ class MeshSession private (
   private[graft] def sqlForPeer(sqlText: String, user: Option[String],
       viaRelay: Option[String], alsoVisited: Set[String],
       withProvenance: Boolean): DataFrame = {
-    val entity = SqlValidator.validate(sqlText, spark)
-    if (!mesh.site(siteName).entities.contains(entity))
-      throw SqlValidator.InvalidQuery(s"Entity $entity not found on relay $siteName")
-    val entityDF = EntityResolver.resolve(spark, mesh, siteName, entity, user,
-      withProvenance, viaRelay, alsoVisited)
-    QueryService.planLock.synchronized {
-      entityDF.createOrReplaceTempView(entity)
-      ViewEpoch.noteShadow()
-      spark.sql(SqlValidator.preprocess(sqlText))
-    }
+    val (entity, entityDF) = resolveFor(mesh, sqlText, user, withProvenance,
+      viaRelay, alsoVisited)
+    bindEntity(sqlText, entity, entityDF)
   }
+
+  /** Validate `sqlText` and resolve its one entity on this site: the
+    * entity's name and its resolved, access-controlled frame. */
+  private[mesh] def resolveFor(meshNow: graft.catalog.Mesh, sqlText: String,
+      user: Option[String], withProvenance: Boolean,
+      viaRelay: Option[String], alsoVisited: Set[String]): (String, DataFrame) = {
+    val entity = SqlValidator.validate(sqlText, spark)
+    if (!meshNow.site(siteName).entities.contains(entity))
+      throw SqlValidator.InvalidQuery(s"Entity $entity not found on relay $siteName")
+    entity -> EntityResolver.resolve(spark, meshNow, siteName, entity, user,
+      withProvenance, viaRelay, alsoVisited)
+  }
+
+  /** Analyze the user's text with the entity's name bound to `entityDF`
+    * (the reference substitutes the mapped sources for the table
+    * reference, `core/src/execute/map_local.rs:24-36`). */
+  private[mesh] def bindEntity(sqlText: String, entity: String,
+      entityDF: DataFrame): DataFrame =
+    org.apache.spark.sql.graft.ColumnBridge.bind(
+      spark, SqlValidator.preprocess(sqlText), Map(entity -> entityDF))
 
   /** [[sql]] with an x509-derived [[graft.catalog.Principal]]: the
     * principal's certificate fingerprint IS the permission key, exactly as
@@ -512,12 +516,8 @@ class QueryService(session: MeshSession, resultDir: String,
       alsoVisited: Set[String] = Set.empty): Seq[((String, String), DataFrame)] = {
     import EntityResolver.{SourceIdCol, SourceRelayCol}
     val spark = session.spark
-    val entity = SqlValidator.validate(sqlText, spark)
-    if (!session.mesh.site(session.siteName).entities.contains(entity))
-      throw SqlValidator.InvalidQuery(
-        s"Entity $entity not found on relay ${session.siteName}")
-    val full = EntityResolver.resolve(
-      spark, session.mesh, session.siteName, entity, user,
+    val meshNow = session.mesh
+    val (entity, full) = session.resolveFor(meshNow, sqlText, user,
       withProvenance = true, viaRelay, alsoVisited)
     // enumerate branches from the CATALOG (get_flight_info semantics,
     // `flight_server/src/flight.rs:194-309`) — no data scan runs before the
@@ -528,28 +528,22 @@ class QueryService(session: MeshSession, resultDir: String,
     // filters below still keep every row. Sources deny-all'd for this user
     // are omitted.
     val branches = EntityResolver
-      .provenanceBranches(spark, session.mesh, session.siteName, entity, user,
+      .provenanceBranches(spark, meshNow, session.siteName, entity, user,
         viaRelay, alsoVisited)
       .sortBy { case (a, b) => (a.getOrElse(""), b.getOrElse("")) }
-    // plan construction registers a shared-name temp view; serialize it
-    // across concurrently-submitted queries (execution stays concurrent)
-    QueryService.planLock.synchronized {
-      branches.toSeq.map { case (relay, srcId) =>
-        full
-          .where(col(SourceRelayCol) <=> relay.map(lit(_)).getOrElse(lit(null)) &&
-            col(SourceIdCol) <=> srcId.map(lit(_)).getOrElse(lit(null)))
-          .drop(SourceRelayCol, SourceIdCol)
-          .createOrReplaceTempView(entity)
-        ViewEpoch.noteShadow()
-        val relayName = relay.getOrElse("(unattributed)")
-        val srcName = srcId.getOrElse("(unattributed)")
-        val base = spark.sql(SqlValidator.preprocess(sqlText))
-        val cast = returnSchema
-          .map(EntityResolver.castToSchema(base, _)).getOrElse(base)
-        (relayName, srcName) -> cast
-          .withColumn(SourceRelayCol, lit(relayName))
-          .withColumn(SourceIdCol, lit(srcName))
-      }
+    branches.toSeq.map { case (relay, srcId) =>
+      val branch = full
+        .where(col(SourceRelayCol) <=> relay.map(lit(_)).getOrElse(lit(null)) &&
+          col(SourceIdCol) <=> srcId.map(lit(_)).getOrElse(lit(null)))
+        .drop(SourceRelayCol, SourceIdCol)
+      val relayName = relay.getOrElse("(unattributed)")
+      val srcName = srcId.getOrElse("(unattributed)")
+      val base = session.bindEntity(sqlText, entity, branch)
+      val cast = returnSchema
+        .map(EntityResolver.castToSchema(base, _)).getOrElse(base)
+      (relayName, srcName) -> cast
+        .withColumn(SourceRelayCol, lit(relayName))
+        .withColumn(SourceIdCol, lit(srcName))
     }
   }
 
@@ -651,10 +645,6 @@ class QueryService(session: MeshSession, resultDir: String,
 }
 
 object QueryService {
-  /** Serializes shared-name temp-view registration during plan building
-    * across concurrent submits (and MeshSession.sql callers). */
-  private[mesh] val planLock = new Object
-
   /** PROCESS-WIDE bounded worker pool shared by every QueryService: a
     * submit flood queues instead of exhausting driver threads (the
     * reference's query_runner drains a work queue the same way), and

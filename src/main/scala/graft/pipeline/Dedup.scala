@@ -695,18 +695,18 @@ object Dedup {
         // here turns loud. Driver-tier ingests compare DISTINCT ids over
         // the checkpointed set frame (set ids are a subset of the
         // candidate ids by construction, batch and corpus ids disjoint —
-        // distinct-count equality == full coverage), in the same ONE job
-        // as a raw-count check that turns DUPLICATE sidecar rows loud: a
-        // duplicated __id (a generation delta retried twice) would
+        // distinct-count equality == full coverage); past the bound, one
+        // candidate-sized anti-join. BOTH tiers run a raw-count check in
+        // the same ONE aggregation that turns DUPLICATE sidecar rows loud:
+        // a duplicated __id (a generation delta retried twice) would
         // silently MULTIPLY its pairs at the verify join, and under the
         // retired raw-count compare a duplicate could exactly offset a
-        // missing doc and pass. Past the bound, one candidate-sized
-        // anti-join.
+        // missing doc and pass.
+        val cov = sets
+          .agg(count(lit(1)).as("n"), countDistinct(col("__id")).as("nd"))
+          .head()
         driverIds match {
           case Some(ids) =>
-            val cov = sets
-              .agg(count(lit(1)).as("n"), countDistinct(col("__id")).as("nd"))
-              .head()
             if (cov.getLong(1) != ids.size) {
               val covered = sets.select(col("__id")).collect().map(_.get(0)).toSet
               val miss = ids.filterNot(covered)
@@ -717,14 +717,6 @@ object Dedup {
                   "folded the index but not the sidecar?); re-append the " +
                   "missing generation or drop storedShingles to verify from text")
             }
-            if (cov.getLong(0) != cov.getLong(1))
-              throw new IllegalStateException(
-                "shingle-set sidecar holds DUPLICATE rows for candidate " +
-                  "document(s) (" + cov.getLong(0) + " rows over " +
-                  cov.getLong(1) + " distinct ids) — a generation delta " +
-                  "appended twice? Verification would silently multiply the " +
-                  "duplicated docs' pairs; compact the sidecar to one row " +
-                  "per doc")
           case None =>
             val missing = candIdFrame.get._1
               .join(sets, col("__cid") === col("__id"), "left_anti")
@@ -736,6 +728,14 @@ object Dedup {
                   "not the sidecar?); re-append the missing generation or drop " +
                   "storedShingles to verify from text")
         }
+        if (cov.getLong(0) != cov.getLong(1))
+          throw new IllegalStateException(
+            "shingle-set sidecar holds DUPLICATE rows for candidate " +
+              "document(s) (" + cov.getLong(0) + " rows over " +
+              cov.getLong(1) + " distinct ids) — a generation delta " +
+              "appended twice? Verification would silently multiply the " +
+              "duplicated docs' pairs; compact the sidecar to one row " +
+              "per doc")
         sets
       case None =>
         val allDocs = corpus.select(col(idCol), col(textCol))
@@ -836,7 +836,7 @@ object Dedup {
       // edge tuples + 68 MB table + 16 MB node list, all dead on return.
       val cap = {
         var c = 8
-        while (c < edges.length * 4 && c > 0) c <<= 1
+        while (c < edges.length.toLong * 4 && c > 0) c <<= 1
         require(c > 0, "edge count overflows the driver tier's table sizing")
         c
       }

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 
 import graft.mesh.Fixtures
 
@@ -12,19 +13,15 @@ import graft.mesh.Fixtures
   */
 object MeshQueries {
 
-  /** Analysis-plan cached (round-16): the view registration + epoch bump
-    * + SQL analysis happen only when the MEMOIZED resolved view (the
-    * scope object) changes — a cache hit touches no catalog state, so it
-    * also stops the per-query shadow bump that forced every later
-    * raw/entity re-assert (~45 ms) on unrelated queries. Results still
-    * compute from parquet on every action (PlanCacheSpec). */
+  /** Analysis-plan cached (round-16): `lineitem_entity` is bound to the
+    * MEMOIZED resolved view for `user` (the scope object), and the SQL is
+    * analyzed again only when that view changes. Results still compute
+    * from parquet on every action (PlanCacheSpec). */
   private def meshSql(user: Option[String], sql: String)(
       s: SparkSession, dir: String): DataFrame = {
     val view = Fixtures.lineitemView(s, dir, user)
     PlanCache.of(s, s"mesh:$dir:${user.getOrElse("")}:$sql", view) {
-      view.createOrReplaceTempView("lineitem_entity")
-      graft.mesh.ViewEpoch.noteShadow()
-      s.sql(sql)
+      ColumnBridge.bind(s, sql, Map("lineitem_entity" -> view))
     }
   }
 
@@ -62,14 +59,13 @@ object MeshQueries {
     "q5_provenance_counts" -> { (s, dir) =>
       val view = Fixtures.lineitemView(s, dir, Some("admin"), withProvenance = true)
       PlanCache.of(s, s"mesh:$dir:q5", view) {
-        view.createOrReplaceTempView("lineitem_entity_prov")
-        graft.mesh.ViewEpoch.noteShadow()
-        s.sql(
+        ColumnBridge.bind(s,
           """SELECT _source_relay_, _source_id_, count(*) AS n,
             |       round(sum(CAST(round(tax_amount * 100) AS BIGINT)) / CAST(100 AS DOUBLE), 2) AS sum_tax
             |FROM lineitem_entity_prov
             |GROUP BY _source_relay_, _source_id_
-            |ORDER BY _source_relay_, _source_id_""".stripMargin)
+            |ORDER BY _source_relay_, _source_id_""".stripMargin,
+          Map("lineitem_entity_prov" -> view))
       }
     },
 
@@ -110,14 +106,12 @@ object MeshQueries {
     // `core/src/model/data_stores/mod.rs:55-62`).
     "q8_jsonpath_field" -> { (s, dir) =>
       PlanCache.of(s, s"mesh:$dir:q8", Fixtures.rawScope(s, dir)) {
-        graft.mesh.EntityResolver
-          .resolve(s, Fixtures.mesh, "global", "telemetry", Some("admin"))
-          .createOrReplaceTempView("telemetry_entity")
-        graft.mesh.ViewEpoch.noteShadow()
-        s.sql(
+        ColumnBridge.bind(s,
           """SELECT event_type, count(*) AS n, sum(k) AS sum_k
             |FROM telemetry_entity
-            |GROUP BY event_type ORDER BY event_type""".stripMargin)
+            |GROUP BY event_type ORDER BY event_type""".stripMargin,
+          Map("telemetry_entity" -> graft.mesh.EntityResolver
+            .resolve(s, Fixtures.mesh, "global", "telemetry", Some("admin"))))
       }
     },
 

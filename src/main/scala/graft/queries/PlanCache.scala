@@ -26,26 +26,27 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * gates exactly this equivalence end-to-end.
   *
   * VALIDITY = reference identity of the `scope` object the plan was
-  * derived from (the memoized resolved-view triple / the raw-table
-  * frame set / a registry's current Mesh value) plus an optional
-  * caller-supplied `stamp` (MeshSession passes the ViewEpoch). A
-  * registry mutation or view re-resolution swaps the scope instance, so
-  * the entry misses and the SQL re-analyzes against the new catalog —
-  * the cached plan can never outlive the views it was analyzed from.
+  * derived from (the memoized resolved-entity frame or triple, or the
+  * raw-table frame set). The builders bind those frames into the plan
+  * by name (`ColumnBridge.bind`), so nothing registered in the session
+  * catalog can change what a cached plan reads. A view re-resolution
+  * swaps the scope instance, so the entry misses and the SQL
+  * re-analyzes — the cached plan can never outlive the frames it was
+  * analyzed from.
   * Entries are per-(session, key); a session's entries die with the
   * session reference like every other per-session memo here. */
 object PlanCache {
-  private final case class Entry(scope: AnyRef, stamp: Long, df: DataFrame)
+  private final case class Entry(scope: AnyRef, df: DataFrame)
   private val cache = TrieMap.empty[(SparkSession, String), Entry]
 
   /** The analyzed+pre-optimized plan for `key`, rebuilt via `build`
-    * whenever `scope` is a different object (or `stamp` differs) from
-    * the entry's. Concurrent misses may build twice; last write wins —
-    * both plans are equivalent by construction. */
-  def of(spark: SparkSession, key: String, scope: AnyRef, stamp: Long = 0L)(
+    * whenever `scope` is a different object from the entry's.
+    * Concurrent misses may build twice; last write wins — both plans are
+    * equivalent by construction. */
+  def of(spark: SparkSession, key: String, scope: AnyRef)(
       build: => DataFrame): DataFrame =
     cache.get((spark, key)) match {
-      case Some(e) if (e.scope eq scope) && e.stamp == stamp => e.df
+      case Some(e) if e.scope eq scope => e.df
       case _ =>
         val df = build
         // force analysis + one optimizer pass NOW (cache-miss time, i.e.
@@ -53,7 +54,7 @@ object PlanCache {
         // already-collapsed tree
         val pre = org.apache.spark.sql.graft.ColumnBridge
           .ofRows(spark, df.queryExecution.optimizedPlan)
-        cache.put((spark, key), Entry(scope, stamp, pre))
+        cache.put((spark, key), Entry(scope, pre))
         pre
     }
 

@@ -599,17 +599,18 @@ object SqlSurface {
     defs.map { q =>
       q.name -> ((s: SparkSession, dir: String) => {
         // analysis-plan cache (round-16): the validator bridge + parse +
-        // analysis of these fixed texts over the MEMOIZED entity views
+        // analysis of these fixed texts over the MEMOIZED entity frames
         // produced a byte-identical plan every invocation (measured
-        // 10-150 ms/query of driver time, ~45 ms more after a mesh
-        // query's view shadow forced the catalog re-asserts). Scope =
-        // the resolved-view triple instance, so any re-resolution
-        // invalidates; every action on the cached plan still optimizes,
-        // plans and executes from parquet (PlanCacheSpec).
-        PlanCache.of(s, s"sqlsurface:$dir:${q.name}", Views.scope(s, dir)) {
-          Views.registerAll(s, dir)
-          s.sql(if (q.bridge) graft.validation.SqlValidator.preprocess(q.sparkSql)
-          else q.sparkSql)
+        // 10-150 ms/query of driver time). Scope = the resolved-entity
+        // map instance, so any re-resolution invalidates; every action
+        // on the cached plan still optimizes, plans and executes from
+        // parquet (PlanCacheSpec).
+        val views = Views.entities(s, dir)
+        PlanCache.of(s, s"sqlsurface:$dir:${q.name}", views) {
+          org.apache.spark.sql.graft.ColumnBridge.bind(s,
+            if (q.bridge) graft.validation.SqlValidator.preprocess(q.sparkSql)
+            else q.sparkSql,
+            views)
         }
       })
     }.toMap

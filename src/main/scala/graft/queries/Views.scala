@@ -1,12 +1,13 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.mesh.{EntityResolver, Fixtures}
 
-/** Registers the resolved entity views (webengine path: every entity becomes
-  * an ordinary queryable table, `webengine/src/register.rs:36-90`) plus the
-  * raw physical tables. Cross-entity SQL then runs on Catalyst, which pushes
+/** The resolved entity frames SQL-surface queries read (webengine path:
+  * every entity becomes an ordinary queryable table bound to its own
+  * provider, `webengine/src/register.rs:36-90`), plus their DuckDB oracle
+  * reconstructions. Cross-entity SQL runs on Catalyst, which pushes
   * projection/filter/limit into each per-source branch — the Spark-native
   * equivalent of the reference's scan-template pushdown (SURVEY §2.5). */
 object Views {
@@ -48,54 +49,25 @@ object Views {
   // resolved-entity plans memoized per (session, sf): resolution is pure
   // plan construction (5-site walk, per-branch SQL analysis, ACL probes —
   // ~100ms of driver time), and the resolved DataFrame captures its plan
-  // eagerly, so one resolution serves every later registration
+  // eagerly, so one resolution serves every later query
   private val resolvedCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String),
-      (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
-        org.apache.spark.sql.DataFrame)]
+    .empty[(SparkSession, String), Map[String, DataFrame]]
 
-  /** Register lineitem/customer/orders entity views (admin access) + raw
-    * physical tables as temp views on `spark`. The VIEW registrations
-    * re-assert on every call — mesh queries legitimately re-register
-    * `lineitem_entity` under other users' ACLs (the entity name must stay
-    * bare per the reference contract) — but they re-assert the MEMOIZED
-    * resolved plan: a catalog put per query, not a re-resolution. */
-  def registerAll(spark: SparkSession, sfDir: String): Unit = {
+  /** The lineitem/customer/orders entities resolved from `global` for the
+    * all-access user, keyed by the names SQL-surface queries bind them to
+    * (`lineitem_entity`, `customer_entity`, `orders_entity`); the raw
+    * physical tables are registered too. Memoized per (session, sf), and
+    * the returned map instance is the [[PlanCache]] scope of every
+    * SqlSurface plan: a re-resolution (new session/sf) swaps the instance
+    * and every dependent cached plan misses. */
+  def entities(spark: SparkSession, sfDir: String): Map[String, DataFrame] = {
     Fixtures.registerRaw(spark, sfDir)
-    val (li, cust, ord) = resolvedCache.getOrElseUpdate((spark, sfDir), {
+    resolvedCache.getOrElseUpdate((spark, sfDir), {
       resolvedCache.filterKeys(_._1 eq spark).keys.foreach(resolvedCache.remove)
-      val mesh = Fixtures.mesh
       val admin = Some("admin")
-      (EntityResolver.resolve(spark, mesh, "global", "lineitem", admin),
-        EntityResolver.resolve(spark, mesh, "global", "customer", admin),
-        EntityResolver.resolve(spark, mesh, "global", "orders", admin))
+      Seq("lineitem", "customer", "orders").map { e =>
+        s"${e}_entity" -> EntityResolver.resolve(spark, Fixtures.mesh, "global", e, admin)
+      }.toMap
     })
-    // view puts are epoch-guarded like registerRaw's: mesh queries register
-    // lineitem_entity under other users' ACLs (and bump the epoch), so the
-    // admin views re-assert only after an actual shadow
-    val epoch = graft.mesh.ViewEpoch.current
-    if (!lastAsserted.get(spark).contains((sfDir, epoch))) {
-      li.createOrReplaceTempView("lineitem_entity")
-      cust.createOrReplaceTempView("customer_entity")
-      ord.createOrReplaceTempView("orders_entity")
-      lastAsserted.put(spark, (sfDir, epoch))
-    }
   }
-
-  private val lastAsserted =
-    scala.collection.concurrent.TrieMap.empty[SparkSession, (String, Long)]
-
-  /** The memoized resolved-view triple itself — the [[PlanCache]] scope
-    * object for SqlSurface plans: a plan analyzed over these three frames
-    * stays valid exactly as long as this instance is what [[registerAll]]
-    * would (re-)assert; a re-resolution (new session/sf, or an eviction)
-    * swaps the instance and every dependent cached plan misses. Builds
-    * via [[registerAll]] on first use; on the hit path it deliberately
-    * does NOT re-assert any temp view — a cached plan consults no
-    * catalog, so the lookup stays a map read. */
-  def scope(spark: SparkSession, sfDir: String): AnyRef =
-    resolvedCache.getOrElse((spark, sfDir), {
-      registerAll(spark, sfDir)
-      resolvedCache((spark, sfDir))
-    })
 }

@@ -1101,12 +1101,6 @@ object SqlValidator {
       .mkString(" ")
   }
 
-  /** Distinct relation names referenced by a SQL text (parse-only; empty on
-    * parse failure — callers use this for advisory checks). */
-  def relationNamesOf(sql: String, spark: SparkSession): Seq[String] =
-    try relationNames(spark.sessionState.sqlParser.parsePlan(sql))
-    catch { case _: Throwable => Nil }
-
   /** All distinct relation names referenced anywhere in the plan, including
     * CTE alias references — matching sqlparser-rs `visit_relations`, which
     * does not resolve CTE scoping (`validation.rs:77-94`): a CTE named after

@@ -20,6 +20,27 @@ object ColumnBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** Parse `sqlText` with the session parser and bind each name in `names`
+    * to its DataFrame for this one query, as an outer CTE: a relation
+    * reference no inner CTE shadows reads the bound frame, and every
+    * other name still resolves through the session catalog. The catalog
+    * is neither read nor written for a bound name, so concurrent queries
+    * binding the same name to different frames cannot see each other. */
+  def bind(
+      spark: org.apache.spark.sql.SparkSession,
+      sqlText: String,
+      names: Map[String, org.apache.spark.sql.DataFrame])
+      : org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.catalyst.plans.logical.{SubqueryAlias, UnresolvedWith}
+    val parsed = spark.sessionState.sqlParser.parsePlan(sqlText)
+    val plan =
+      if (names.isEmpty) parsed
+      else UnresolvedWith(parsed, names.toSeq.map { case (n, df) =>
+        (n, SubqueryAlias(n, df.queryExecution.analyzed), None)
+      })
+    ofRows(spark, plan)
+  }
+
   /** The analyzed logical plan of a DataFrame (for embedding as a child of
     * a custom logical operator). */
   def planOf(df: org.apache.spark.sql.DataFrame)

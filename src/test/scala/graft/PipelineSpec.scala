@@ -1044,6 +1044,29 @@ class PipelineSpec extends AnyFunSuite {
     assert(eOffset.getMessage.contains("does not cover"))
   }
 
+  test("distributed-tier ingest refuses DUPLICATE shingle-sidecar rows, like the driver tier") {
+    Fixtures.registerRaw(spark, sfDir)
+    val docs = spark.table("documents")
+    val batch = docs.where(col("doc_id") % 10 === 3)
+    val corpus = docs.where(col("doc_id") % 10 =!= 3)
+    val index = graft.pipeline.Dedup.bandIndex(corpus, "doc_id", "text")
+    val corpusCand = graft.pipeline.Dedup
+      .incrementalNearDupPairs(batch, corpus, index, "doc_id", "text")
+      .collect().iterator.flatMap(r => Seq(r.getLong(0), r.getLong(1)))
+      .filter(_ % 10 != 3).next()
+    val store = graft.pipeline.Dedup.shingleSets(corpus, "doc_id", "text")
+    val dupRow = store.where(col("__id") === corpusCand)
+    // inListMaxIds = 0 forces the distributed tier (anti-join coverage
+    // check); a duplicated __id would multiply that doc's pairs there
+    val e = intercept[IllegalStateException] {
+      graft.pipeline.Dedup.incrementalNearDupPairs(
+        batch, corpus, index, "doc_id", "text",
+        storedShingles = Some(store.union(dupRow)),
+        inListMaxIds = 0, broadcastMaxIds = -1).collect()
+    }
+    assert(e.getMessage.contains("DUPLICATE"))
+  }
+
   test("rolling-merge broadcasts are size-gated: past the bound the joins run unhinted, results identical") {
     Fixtures.registerRaw(spark, sfDir)
     val docs = spark.table("documents")

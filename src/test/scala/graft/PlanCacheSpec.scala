@@ -30,9 +30,6 @@ class PlanCacheSpec extends AnyFunSuite {
     val df3 = PlanCache.of(spark, "spec:key1", scopeB)(build())
     assert(builds == 2)
     assert(!(df3 eq df1))
-    // stamp change alone also rebuilds (the MeshSession epoch semantics)
-    PlanCache.of(spark, "spec:key1", scopeB, stamp = 7L)(build()): Unit
-    assert(builds == 3)
   }
 
   test("cached SqlSurface plan executes from parquet on every action (no stored rows)") {
@@ -79,7 +76,7 @@ class PlanCacheSpec extends AnyFunSuite {
     val q = "select k from pc_probe order by k"
     val df1 = session.sql(q)
     val df2 = session.sql(q)
-    assert(df1 eq df2, "unchanged registry + epoch must hit the plan cache")
+    assert(df1 eq df2, "unchanged registry must hit the plan cache")
     assert(df2.agg(sum(col("k"))).head.getLong(0) == 10) // 0+1+2+3+4
     // admin upsert swaps the registry's Mesh value: the SAME text must
     // re-resolve and see the new mapping — a stale cached plan would
@@ -88,11 +85,17 @@ class PlanCacheSpec extends AnyFunSuite {
     val df3 = session.sql(q)
     assert(!(df3 eq df2), "mutation must invalidate the cached plan")
     assert(df3.agg(sum(col("k"))).head.getLong(0) == 100)
-    // a shared-view shadow (epoch bump) also re-analyzes
+    // the entity is bound into the plan by name, not read from the
+    // session catalog: an unrelated temp view registered under the
+    // entity's name neither invalidates the cached plan nor changes it
     val df4 = session.sql(q)
     assert(df4 eq df3)
-    graft.mesh.ViewEpoch.noteShadow()
-    assert(!(session.sql(q) eq df4), "an epoch bump must invalidate")
+    spark.range(1000).toDF("k").createOrReplaceTempView("pc_probe")
+    try {
+      val df5 = session.sql(q)
+      assert(df5 eq df4, "a same-named temp view must not invalidate")
+      assert(df5.agg(sum(col("k"))).head.getLong(0) == 100)
+    } finally spark.catalog.dropTempView("pc_probe"): Unit
   }
 
   test("MeshSession: a repeated text sees a wire peer's change (endpoint paths skip the cache)") {

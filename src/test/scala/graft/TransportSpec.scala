@@ -454,7 +454,6 @@ class TransportSpec extends AnyFunSuite {
     // registered view (the peer-side execution path)
     assert(graft.validation.SqlValidator.validate(wrapped, spark) == "documents")
     spark.table("raw_documents").createOrReplaceTempView("documents")
-    graft.mesh.ViewEpoch.noteShadow()
     val out = spark.sql(wrapped)
     assert(out.columns.toSeq == Seq("doc_id", "n_chars"))
     assert(out.where(col("n_chars") % 2 =!= 0).count() == 0) // all doubled
@@ -463,7 +462,8 @@ class TransportSpec extends AnyFunSuite {
       "WITH t AS (SELECT doc_id FROM documents) SELECT doc_id FROM t")
     assert(merged.matches("(?s)WITH documents AS \\(.*\\), t AS .*"))
     assert(spark.sql(merged).count() == spark.table("raw_documents").count())
-    // differing names: user text re-points at the remote entity name
+    // differing names: user text re-points at the remote entity name,
+    // keeping the local name as the alias for qualified columns
     val renamed = RemoteEntityMapping(peer = "docs_remote",
       remoteEntity = "docs_remote",
       infoMappings = identityInfoMappings.map {
@@ -472,7 +472,46 @@ class TransportSpec extends AnyFunSuite {
       })
     val pointed = mapSql(renamed, "SELECT documents.doc_id FROM documents")
     assert(pointed.contains("WITH docs_remote AS ("))
-    assert(pointed.endsWith("SELECT docs_remote.doc_id FROM docs_remote"))
+    assert(pointed.endsWith("SELECT documents.doc_id FROM docs_remote AS documents"))
+  }
+
+  test("mapRemoteRequestSql re-points relation references only: literals and columns named like the entity keep their text") {
+    Fixtures.registerRaw(spark, sfDir)
+    val entity = Fixtures.documentsEntity
+    val mesh = Mesh(Map("docs_remote" -> Site("docs_remote",
+      Map("docs_remote" -> entity.copy(name = "docs_remote")))))
+    val rm = RemoteEntityMapping(peer = "docs_remote", remoteEntity = "docs_remote",
+      infoMappings = identityInfoMappings)
+    val userSql =
+      "SELECT 'documents' AS kind, lang AS documents, count(*) AS n FROM documents " +
+        "WHERE doc_id IN (SELECT d.doc_id FROM documents d WHERE d.n_chars > 0) " +
+        "GROUP BY lang ORDER BY documents"
+    val mapped = EntityResolver.mapRemoteRequestSql(spark, mesh, entity, rm, userSql)
+    assert(mapped.endsWith(
+      "SELECT 'documents' AS kind, lang AS documents, count(*) AS n " +
+        "FROM docs_remote AS documents " +
+        "WHERE doc_id IN (SELECT d.doc_id FROM docs_remote d WHERE d.n_chars > 0) " +
+        "GROUP BY lang ORDER BY documents"), mapped)
+    // the peer sees one entity, and answers what the local text answers
+    assert(graft.validation.SqlValidator.validate(mapped, spark) == "docs_remote")
+    spark.table("raw_documents").createOrReplaceTempView("docs_remote")
+    try {
+      val got = spark.sql(mapped)
+      assert(got.columns.toSeq == Seq("kind", "documents", "n"))
+      assert(got.collect().toSeq == spark.sql(userSql).collect().toSeq)
+    } finally spark.catalog.dropTempView("docs_remote"): Unit
+    // a user CTE named like the entity: its body reads the entity and is
+    // re-pointed, references to the CTE keep their name, so the peer's
+    // validator refuses the second name instead of the hop skipping the CTE
+    val withCte = EntityResolver.mapRemoteRequestSql(spark, mesh, entity, rm,
+      "WITH documents AS (SELECT * FROM documents WHERE doc_id > 5) " +
+        "SELECT doc_id FROM documents")
+    assert(withCte.endsWith(
+      "documents AS (SELECT * FROM docs_remote AS documents WHERE doc_id > 5) " +
+        "SELECT doc_id FROM documents"), withCte)
+    intercept[graft.validation.SqlValidator.InvalidQuery] {
+      graft.validation.SqlValidator.validate(withCte, spark)
+    }
   }
 
   test("admin apply over the wire: upserts land in the live registry, next query sees them") {

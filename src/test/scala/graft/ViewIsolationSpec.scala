@@ -2,12 +2,13 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Driver queries must be order-independent: a mesh query that registers
-  * an entity view under a restricted user's ACL must not leak that view
-  * into SQL-surface queries that run later in the same session (the view
-  * name is shared by design — the reference requires user SQL to address
-  * the bare entity name). Regression for the registerAll memoization bug
-  * where q4's restricted `lineitem_entity` shrank q11's input. */
+/** Driver queries must be order-independent: a mesh query that reads an
+  * entity under a restricted user's ACL must not leak it into SQL-surface
+  * queries that run later in the same session (the name is shared by
+  * design — the reference requires user SQL to address the bare entity
+  * name; each query binds it for itself). Regression for the old
+  * view-registration memoization bug where q4's restricted
+  * `lineitem_entity` shrank q11's input. */
 class ViewIsolationSpec extends AnyFunSuite {
 
   lazy val spark = TestSessions.spark
@@ -24,7 +25,7 @@ class ViewIsolationSpec extends AnyFunSuite {
     val q11 = SparkEntry.queries("q11_window_funcs")
     val before = q11(spark, sfDir).count()
     // q4 resolves the lineitem entity under the DEFAULT (restricted) ACL
-    // and registers it as `lineitem_entity`
+    // and binds it as `lineitem_entity`
     SparkEntry.queries("q4_tpch_q1_acl_default")(spark, sfDir).collect()
     val after = q11(spark, sfDir).count()
     assert(after == before,
@@ -34,7 +35,7 @@ class ViewIsolationSpec extends AnyFunSuite {
   test("a MeshSession entity view under a BARE table name does not shadow raw tables") {
     val q32 = SparkEntry.queries("q32_tpch_q5_join")
     val before = q32(spark, sfDir).collect().toSeq
-    // the mesh API registers the queried entity under its bare name
+    // the mesh API binds the queried entity under its bare name
     // ('lineitem'), exactly where the raw physical table lives — with the
     // restricted default ACL (no user), far fewer rows
     val session = new graft.mesh.MeshSession(spark, graft.mesh.Fixtures.mesh, "global")

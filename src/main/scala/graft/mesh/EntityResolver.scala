@@ -29,7 +29,12 @@ import graft.catalog._
   * scan, Catalyst pushes user predicates and column pruning all the way into
   * the parquet scan of every branch — the rebuild's equivalent of the
   * reference's per-source SQL pushdown (`webengine/src/web_source.rs:98-143`),
-  * with joins/aggs/sorts supplied by Spark (SURVEY §2.3).
+  * with joins/aggs/sorts supplied by Spark (SURVEY §2.3). An endpoint-backed
+  * peer's branch is a relay scan ([[graft.transport.RelayScan]]) that takes
+  * the same pushdown into the SQL it sends the peer. Resolving makes no wire
+  * call and the returned frame holds no rows: each query execution fetches
+  * the peer's answer when its scan is planned, so a resolved frame can be
+  * bound into any number of queries.
   */
 object EntityResolver {
   val SourceRelayCol = "_source_relay_"
@@ -80,14 +85,6 @@ object EntityResolver {
     pathExists(mesh, siteName, entityName)((s, entity) =>
       s.localSources.getOrElse(entity, Nil)
         .exists(_.fileSource.exists(_.format == "parquet")))
-
-  /** Does the resolution path of (site, entity) reach an endpoint-backed
-    * peer? Resolving such a path fetches the peer's rows over the wire
-    * into the plan, so the plan holds the rows as of that fetch. */
-  private[graft] def pathReachesEndpoint(
-      mesh: Mesh, siteName: String, entityName: String): Boolean =
-    pathExists(mesh, siteName, entityName)((s, _) =>
-      s.name != siteName && s.endpoint.nonEmpty)
 
   /** Walk (site, entity) and every (peer, remote entity) its remote
     * mappings reach, with resolveRec's visited semantics; true once
@@ -200,8 +197,7 @@ object EntityResolver {
     if (identityHop) return userSql
     // which columns does the rendered template actually emit? (schema-only
     // probe — mirrors remoteInfoProjection's runtime availability check)
-    val remoteSchema = mesh.site(rm.peer).entities(rm.remoteEntity).schema
-    val available = templateColumns(spark, rm, remoteSchema)
+    val available = templateColumns(spark, rm, remoteSchema(mesh, rm, withProvenance = false))
     val proj = entity.informations.map { info =>
       rm.infoMappings.find(_.localInfo == info.name) match {
         case Some(m) if available.contains(m.remoteInfo) =>
@@ -268,13 +264,26 @@ object EntityResolver {
     }
   }
 
-  /** The columns `rm`'s template emits over a remote entity of
-    * `remoteSchema`: Catalyst analysis over an empty frame, no job runs. */
-  private def templateColumns(spark: SparkSession, rm: RemoteEntityMapping,
-      remoteSchema: StructType): Set[String] = {
+  /** What `rm`'s template emits over a remote entity of `remoteSchema`:
+    * Catalyst analysis over an empty frame, no job runs. */
+  private def templateSchema(spark: SparkSession, rm: RemoteEntityMapping,
+      remoteSchema: StructType): StructType = {
     val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], remoteSchema)
     ColumnBridge.bind(spark, rm.renderSql(rm.remoteEntity),
-      Map(rm.remoteEntity -> empty)).columns.toSet
+      Map(rm.remoteEntity -> empty)).schema
+  }
+
+  private def templateColumns(spark: SparkSession, rm: RemoteEntityMapping,
+      remoteSchema: StructType): Set[String] =
+    templateSchema(spark, rm, remoteSchema).fieldNames.toSet
+
+  /** The remote entity's schema, plus the provenance columns when asked. */
+  private def remoteSchema(mesh: Mesh, rm: RemoteEntityMapping,
+      withProvenance: Boolean): StructType = {
+    val schema = mesh.site(rm.peer).entities(rm.remoteEntity).schema
+    if (!withProvenance) schema
+    else StructType(schema.fields ++ Seq(
+      StructField(SourceRelayCol, StringType), StructField(SourceIdCol, StringType)))
   }
 
   /** Plan-only check: which provenance columns does `rm.sqlTemplate` keep?
@@ -283,9 +292,7 @@ object EntityResolver {
     * `_source_relay_`, keeps `_source_id_`). */
   private def templateProvenance(
       spark: SparkSession, mesh: Mesh, rm: RemoteEntityMapping): (Boolean, Boolean) = {
-    val remoteSchema = mesh.site(rm.peer).entities(rm.remoteEntity).schema
-    val cols = templateColumns(spark, rm, StructType(remoteSchema.fields ++ Seq(
-      StructField(SourceRelayCol, StringType), StructField(SourceIdCol, StringType))))
+    val cols = templateColumns(spark, rm, remoteSchema(mesh, rm, withProvenance = true))
     (cols.contains(SourceRelayCol), cols.contains(SourceIdCol))
   }
 
@@ -350,42 +357,24 @@ object EntityResolver {
               // is rendered against the peer's entity name and EXECUTES ON
               // THE PEER (the reference ships the mapped request to the
               // remote relay, `core/src/execute/map_remote.rs` semantics);
-              // identity, user, and the visited set cross in headers, and
-              // the result comes back as an Arrow stream decoded into
-              // in-memory rows (parquet past the peer's wire Arrow bound
-              // or row cap, or for types the codec does not carry), so
-              // only a small result is held in memory here. The fetch
-              // happens at resolve time — the reference's get_flight_info
-              // + do_get are likewise issued when the scan is planned —
-              // so the plan holds the peer's rows as of this call.
-              val templated = graft.transport.RelayClient.syncFetch(
-                spark, url, rm.renderSql(rm.remoteEntity), user,
-                viaRelay = siteName, visited = visited + rm.peer,
-                withProvenance = withProvenance)
-              // On the WIRE path the peer appends provenance itself when
-              // asked (sqlForPeer resolves with withProvenance=true before
-              // applying the template), so unless the mapping template
-              // itself drops the columns (a legitimate choice the
-              // plan-only templateProvenance probe detects), a payload
-              // missing them is a protocol fault. Degrading to NULL here
-              // (as the in-process projection legitimately does for
-              // provenance-dropping templates) would silently flip result
-              // hashes while keeping row counts/schema intact — fail
-              // loudly with the fetched schema instead.
-              if (withProvenance) {
-                val (keepsRelay, keepsId) = templateProvenance(spark, mesh, rm)
-                val expected = Seq(
-                  SourceRelayCol -> keepsRelay, SourceIdCol -> keepsId)
-                  .collect { case (c, true) => c }
-                val got = templated.columns.toSet
-                val missing = expected.filterNot(got)
-                if (missing.nonEmpty)
-                  throw new IllegalStateException(
-                    s"wire fetch from peer '${rm.peer}' ($url) requested " +
-                      s"provenance but the payload lacks ${missing.mkString(", ")}; " +
-                      s"fetched schema: ${templated.schema.simpleString}")
-              }
-              remoteInfoProjection(entity, rm, templated, withProvenance)
+              // identity, user, and the visited set cross in headers. The
+              // branch is a relay scan over what the template emits: no
+              // wire call happens here. Each query execution fetches when
+              // its scan is planned — the reference's get_flight_info +
+              // do_get are likewise issued at scan planning — asking only
+              // for the query's columns and exact filters. On the wire the
+              // peer appends provenance itself when asked (sqlForPeer
+              // resolves with withProvenance=true before applying the
+              // template), so the scan's schema carries the provenance
+              // columns the template keeps, and a payload missing a
+              // required one fails loudly with the fetched schema rather
+              // than degrading to NULL (which would silently flip result
+              // hashes while keeping row counts and schema intact).
+              val relay = graft.transport.RelayScan.frame(spark, graft.transport.RelayHop(
+                rm.peer, url, rm.renderSql(rm.remoteEntity),
+                templateSchema(spark, rm, remoteSchema(mesh, rm, withProvenance)), user,
+                viaRelay = siteName, visited = visited + rm.peer, withProvenance))
+              remoteInfoProjection(entity, rm, relay, withProvenance)
             case None =>
               val remoteDF = resolveRec(
                 spark, mesh, rm.peer, rm.remoteEntity, user, withProvenance,

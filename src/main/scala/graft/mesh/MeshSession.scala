@@ -36,26 +36,23 @@ class MeshSession private (
   /** The catalog as of NOW (re-read per query for registry-backed sessions). */
   def mesh: graft.catalog.Mesh = meshProvider()
 
-  /** Per-session analysis-plan cache (round-16): a repeated query text
-    * skips validate -> resolve -> bind -> analyze when NOTHING it
-    * depends on has moved. Validity is the Mesh VALUE's reference
-    * identity: the registry swaps in a new immutable Mesh on every
-    * admin upsert, so any catalog mutation invalidates every cached
-    * plan on the next query (PlanCacheSpec pins it). The entity is
-    * bound into the plan by name ([[bindEntity]]), never through the
-    * session's temp-view catalog, so no other session's work and no
-    * catalog registration can change what a cached plan reads.
-    * Cached = a PLAN; every action re-optimizes and re-executes from
-    * the sources. An entity whose resolution path reaches an
-    * endpoint-backed peer is never cached: its plan holds the rows the
-    * peer returned at resolve time, and a change on the peer does not
-    * move the local Mesh. Bounded: a serving session's distinct-text
-    * cache is capped, dropping wholesale at the cap (plans are cheap to
-    * rebuild; an LRU would be ceremony). */
-  private val planCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Option[String], Boolean, Option[StructType]),
+  /** Resolved entity frames, one per (entity, user, withProvenance,
+    * viaRelay, visited) and valid for one Mesh VALUE (by reference: the
+    * registry swaps in a new immutable Mesh on every admin upsert, so any
+    * catalog mutation re-resolves on the next query). A resolved frame
+    * holds no rows — local branches are plans over their sources, and an
+    * endpoint peer's branch is a relay scan that fetches per execution —
+    * so every query text for the same entity and requester binds over the
+    * same frame and its analysis, and no query ever sees another's rows.
+    * The entity is bound by name ([[bindEntity]]), never through the
+    * session's temp-view catalog. Each call binds a FRESH Dataset: an
+    * action re-run on one Dataset reuses its shuffle output, which would
+    * serve a peer's old rows. Bounded: dropped wholesale at the cap
+    * (frames are cheap to rebuild; an LRU would be ceremony). */
+  private val resolved = scala.collection.concurrent.TrieMap
+    .empty[(String, Option[String], Boolean, Option[String], Set[String]),
       (graft.catalog.Mesh, DataFrame)]
-  private val PlanCacheMax = 128
+  private val ResolvedMax = 128
 
   /** Validate + execute `sqlText` as `user` against this site's catalog.
     *
@@ -66,21 +63,9 @@ class MeshSession private (
   def sql(sqlText: String, user: Option[String] = None,
       withProvenance: Boolean = false,
       returnSchema: Option[StructType] = None): DataFrame = {
-    val key = (sqlText, user, withProvenance, returnSchema)
-    val meshNow = mesh
-    planCache.get(key) match {
-      case Some((m, df)) if m eq meshNow => df
-      case _ =>
-        val (entity, entityDF) = resolveFor(meshNow, sqlText, user,
-          withProvenance, viaRelay = None, alsoVisited = Set.empty)
-        val out = bindEntity(sqlText, entity, entityDF)
-        val cast = returnSchema.map(EntityResolver.castToSchema(out, _)).getOrElse(out)
-        if (!EntityResolver.pathReachesEndpoint(meshNow, siteName, entity)) {
-          if (planCache.size >= PlanCacheMax) planCache.clear()
-          planCache.put(key, (meshNow, cast))
-        }
-        cast
-    }
+    val (entity, entityDF) = resolveFor(sqlText, user, withProvenance)
+    val out = bindEntity(sqlText, entity, entityDF)
+    returnSchema.map(EntityResolver.castToSchema(out, _)).getOrElse(out)
   }
 
   /** The relay-to-relay entry point behind [[graft.transport.RelayServer]]'s
@@ -93,21 +78,32 @@ class MeshSession private (
   private[graft] def sqlForPeer(sqlText: String, user: Option[String],
       viaRelay: Option[String], alsoVisited: Set[String],
       withProvenance: Boolean): DataFrame = {
-    val (entity, entityDF) = resolveFor(mesh, sqlText, user, withProvenance,
+    val (entity, entityDF) = resolveFor(sqlText, user, withProvenance,
       viaRelay, alsoVisited)
     bindEntity(sqlText, entity, entityDF)
   }
 
   /** Validate `sqlText` and resolve its one entity on this site: the
-    * entity's name and its resolved, access-controlled frame. */
-  private[mesh] def resolveFor(meshNow: graft.catalog.Mesh, sqlText: String,
-      user: Option[String], withProvenance: Boolean,
-      viaRelay: Option[String], alsoVisited: Set[String]): (String, DataFrame) = {
+    * entity's name and its resolved, access-controlled frame, memoized
+    * for `meshNow`. */
+  private[graft] def resolveFor(sqlText: String, user: Option[String],
+      withProvenance: Boolean, viaRelay: Option[String] = None,
+      alsoVisited: Set[String] = Set.empty,
+      meshNow: graft.catalog.Mesh = mesh): (String, DataFrame) = {
     val entity = SqlValidator.validate(sqlText, spark)
     if (!meshNow.site(siteName).entities.contains(entity))
       throw SqlValidator.InvalidQuery(s"Entity $entity not found on relay $siteName")
-    entity -> EntityResolver.resolve(spark, meshNow, siteName, entity, user,
-      withProvenance, viaRelay, alsoVisited)
+    val key = (entity, user, withProvenance, viaRelay, alsoVisited)
+    val frame = resolved.get(key) match {
+      case Some((m, df)) if m eq meshNow => df
+      case _ =>
+        val df = EntityResolver.resolve(spark, meshNow, siteName, entity, user,
+          withProvenance, viaRelay, alsoVisited)
+        if (resolved.size >= ResolvedMax) resolved.clear()
+        resolved.put(key, (meshNow, df))
+        df
+    }
+    entity -> frame
   }
 
   /** Analyze the user's text with the entity's name bound to `entityDF`
@@ -517,8 +513,8 @@ class QueryService(session: MeshSession, resultDir: String,
     import EntityResolver.{SourceIdCol, SourceRelayCol}
     val spark = session.spark
     val meshNow = session.mesh
-    val (entity, full) = session.resolveFor(meshNow, sqlText, user,
-      withProvenance = true, viaRelay, alsoVisited)
+    val (entity, full) = session.resolveFor(sqlText, user,
+      withProvenance = true, viaRelay, alsoVisited, meshNow)
     // enumerate branches from the CATALOG (get_flight_info semantics,
     // `flight_server/src/flight.rs:194-309`) — no data scan runs before the
     // first branch task. Remote sql templates without SELECT * degrade

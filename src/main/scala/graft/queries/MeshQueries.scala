@@ -153,10 +153,13 @@ object MeshQueries {
                 infoMappings = Fixtures.documentsEntity.informations
                   .map(i => RemoteInfoMapping(i.name, i.name)))))),
           "beta" -> stub))
-        // the wire fetch happens here (resolve-time do_get); afterwards the
-        // remote half is held in memory and the server can go
+        // the wire fetch happens when a query over the entity is planned
+        // (do_get at scan planning); checkpointing the resolved entity
+        // runs it now, so the remote half is held in memory and the
+        // server can go
         graft.mesh.EntityResolver
           .resolve(s, mesh, "alpha", "documents", withProvenance = true)
+          .localCheckpoint()
           .groupBy(col("lang"), col(graft.mesh.EntityResolver.SourceIdCol))
           .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("sum_chars"))
           .orderBy(col("lang"), col(graft.mesh.EntityResolver.SourceIdCol))

@@ -109,29 +109,9 @@ class GraftScanBuilder(
   private var pushed: Array[sources.Filter] = Array.empty
   private var limit: Option[Int] = None
 
-  /** P2 classification: a filter is Exact iff it is a simple comparison /
-    * null test (possibly negated) on a plain entity column with a primitive
-    * literal — the same shapes `expr_to_sql.rs:32-106` can serialize. */
-  private def pushable(f: sources.Filter): Boolean = f match {
-    case sources.EqualTo(_, v)            => primitive(v)
-    case sources.GreaterThan(_, v)        => primitive(v)
-    case sources.GreaterThanOrEqual(_, v) => primitive(v)
-    case sources.LessThan(_, v)           => primitive(v)
-    case sources.LessThanOrEqual(_, v)    => primitive(v)
-    case sources.IsNull(_)                => true
-    case sources.IsNotNull(_)             => true
-    case sources.Not(child)               => pushable(child)
-    case _                                => false // In/Like/StartsWith/... -> Unsupported
-  }
-
-  private def primitive(v: Any): Boolean = v match {
-    case _: Boolean | _: Int | _: Long | _: Double | _: Float | _: Short |
-         _: Byte | _: String | _: java.sql.Date | _: java.time.LocalDate => true
-    case _ => false
-  }
-
+  /** P2 classification: the shared [[ExactFilters]] rule. */
   override def pushFilters(filters: Array[sources.Filter]): Array[sources.Filter] = {
-    val (p, rest) = filters.partition(pushable)
+    val (p, rest) = filters.partition(ExactFilters.accepts)
     pushed = p
     rest // unsupported -> Spark re-applies them above the scan
   }

@@ -8,16 +8,17 @@ import java.time.Duration
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.graft.{ColumnBridge, ResultRows}
 import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.catalog.{ArrowLikeType, Entity, Information, Site}
 
 /** Client side of [[RelayServer]]'s wire protocol: peer registration
   * (`/catalog` → stub [[Site]]), get_flight_info branch enumeration,
-  * synchronous entity fetch (do_get; what [[graft.mesh.EntityResolver]]
-  * calls for an endpoint-backed peer), the async REST path (submit /
-  * status / result / ndjson), and do_put result push.
+  * synchronous fetch (do_get; what a [[RelayScan]] sends for an
+  * endpoint-backed peer's branch, once per query execution, with the
+  * query's columns and exact filters in the SQL), the async REST path
+  * (submit / status / result / ndjson), and do_put result push.
   *
   * Endpoints are plain `http://host:port` URLs; URL userinfo
   * (`http://token@host:port`) is stripped from the request URI and sent as
@@ -128,8 +129,9 @@ object RelayClient {
   /** Run `sql` on the peer as forwarding relay `viaRelay` and read the
     * response into a DataFrame: an Arrow body decodes in memory into
     * Spark's internal rows, a parquet body lands in a temp file scanned
-    * lazily. The download is eager (it happens when the resolver builds
-    * the plan, like get_flight_info + do_get at scan planning). */
+    * lazily. The download happens in this call; a [[RelayScan]] makes it
+    * when its scan is planned, like get_flight_info + do_get at scan
+    * planning. */
   def syncFetch(spark: SparkSession, endpoint: String, sql: String,
       user: Option[String], viaRelay: String, visited: Set[String],
       withProvenance: Boolean): DataFrame = {
@@ -255,33 +257,21 @@ object RelayClient {
   // ---- do_put -----------------------------------------------------------
 
   /** Push a branch result to the origin relay's ingest endpoint (S9
-    * do_put): the frame is spilled to a single local parquet file and
-    * streamed. */
+    * do_put): the frame is written as one parquet file from one execution
+    * of it (`ResultRows.asParquet`, an empty result as a file of its
+    * schema) and streamed. */
   def pushResult(endpoint: String, id: String, branch: String,
       df: DataFrame): Unit = {
-    val tmp = Files.createTempDirectory("graft_push_")
+    val tmp = RelayServer.outDir()
     try {
-      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = {
-        val s = Files.list(tmp)
-        try {
-          val it = s.filter(p => p.getFileName.toString.startsWith("part-") &&
-            p.getFileName.toString.endsWith(".parquet")).iterator()
-          if (it.hasNext) it.next()
-          else throw new RelayException("cannot push an empty result stream")
-        } finally s.close()
-      }
+      val (file, _) = ResultRows.asParquet(df, RelayServer.WireArrowMaxBytes, tmp)
       val req = request(endpoint, s"/ingest/${urlEnc(id)}/${urlEnc(branch)}")
         .header("Content-Type", ParquetType)
-        .PUT(HttpRequest.BodyPublishers.ofFile(part))
+        .PUT(HttpRequest.BodyPublishers.ofFile(file))
         .build()
       val resp = http.send(req, HttpResponse.BodyHandlers.ofByteArray())
       checkOk(resp, s"PUT $endpoint/ingest/$id/$branch")
-    } finally {
-      val s = Files.list(tmp)
-      try s.forEach(p => { Files.deleteIfExists(p): Unit }) finally s.close()
-      Files.deleteIfExists(tmp): Unit
-    }
+    } finally RelayServer.deleteRecursively(tmp)
   }
 
   // ---- plumbing ---------------------------------------------------------

@@ -422,8 +422,7 @@ final class RelayServer(
     if (!df.schema.fields.forall(f => ArrowCodec.supports(f.dataType)))
       return respondParquet(ex, df)
     // created by the parquet writers only if the answer is parquet
-    val tmp = Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_relay_out_${java.util.UUID.randomUUID()}")
+    val tmp = RelayServer.outDir()
     try ResultRows.rowsOrParquet(
         df, RelayServer.WireArrowMaxBytes, arrowRowCap, tmp) match {
       case Left(rows) =>
@@ -431,7 +430,7 @@ final class RelayServer(
         ArrowCodec.write(df.schema, rows.iterator.map(ResultRows.toExternal(df.schema)), buf)
         respond(ex, 200, ArrowCodec.ContentType, buf.toByteArray)
       case Right(file) => sendParquet(ex, file)
-    } finally deleteRecursively(tmp)
+    } finally RelayServer.deleteRecursively(tmp)
   }
 
   /** PUT /ingest/{id}/{branch}: do_put — an executor relay pushes a
@@ -492,22 +491,21 @@ final class RelayServer(
 
   // ---- plumbing ---------------------------------------------------------
 
-  /** Serialize a DataFrame to a single parquet stream. An empty result with
-    * zero partitions writes no part file; its schema crosses in the
-    * `X-Graft-Empty` header instead (Spark's StructType JSON). */
+  /** Serialize a DataFrame to a single parquet stream from one execution
+    * of it (`ResultRows.asParquet`: rows within
+    * [[RelayServer.WireArrowMaxBytes]] come back and the driver writes
+    * them; a bulk result keeps the tasks' files, merged). An empty result
+    * sends no body; its schema crosses in the `X-Graft-Empty` header
+    * instead (Spark's StructType JSON). */
   private def respondParquet(ex: HttpExchange, df: DataFrame): Unit = {
-    val tmp = Files.createTempDirectory("graft_relay_out_")
-    try {
-      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      partFile(tmp) match {
-        case Some(p) => sendParquet(ex, p)
-        case None =>
-          ex.getResponseHeaders.set("X-Graft-Empty",
-            java.util.Base64.getEncoder.encodeToString(
-              df.schema.json.getBytes(UTF_8)))
-          respond(ex, 200, "application/vnd.apache.parquet", Array.emptyByteArray)
-      }
-    } finally deleteRecursively(tmp)
+    val tmp = RelayServer.outDir()
+    try ResultRows.asParquet(df, RelayServer.WireArrowMaxBytes, tmp) match {
+      case (_, true) =>
+        ex.getResponseHeaders.set("X-Graft-Empty",
+          java.util.Base64.getEncoder.encodeToString(df.schema.json.getBytes(UTF_8)))
+        respond(ex, 200, "application/vnd.apache.parquet", Array.emptyByteArray)
+      case (file, false) => sendParquet(ex, file)
+    } finally RelayServer.deleteRecursively(tmp)
   }
 
   private def sendParquet(ex: HttpExchange, file: Path): Unit = {
@@ -515,23 +513,6 @@ final class RelayServer(
     ex.sendResponseHeaders(200, Files.size(file))
     val out = ex.getResponseBody
     try Files.copy(file, out) finally out.close()
-  }
-
-  private def partFile(dir: Path): Option[Path] = {
-    val s = Files.list(dir)
-    try {
-      val it = s.filter(p => p.getFileName.toString.startsWith("part-") &&
-        p.getFileName.toString.endsWith(".parquet")).iterator()
-      if (it.hasNext) Some(it.next()) else None
-    } finally s.close()
-  }
-
-  private def deleteRecursively(p: Path): Unit = {
-    if (Files.isDirectory(p)) {
-      val s = Files.list(p)
-      try s.forEach(deleteRecursively(_)) finally s.close()
-    }
-    Files.deleteIfExists(p): Unit
   }
 
   private def relayHeaders(ex: HttpExchange): (Option[String], Set[String]) = {
@@ -599,4 +580,16 @@ object RelayServer {
     * (428 vs 398 ms; 806 vs 518 ms at 240k). 8 MB is ~58k such rows; a
     * mesh result of the relay-sync benchmark is 10-20k rows. */
   private[graft] val WireArrowMaxBytes: Long = 8L << 20
+
+  /** A fresh path for one result's parquet output; the writers create it. */
+  private[transport] def outDir(): Path = Paths.get(System.getProperty("java.io.tmpdir"),
+    s"graft_relay_out_${java.util.UUID.randomUUID()}")
+
+  private[transport] def deleteRecursively(p: Path): Unit = {
+    if (Files.isDirectory(p)) {
+      val s = Files.list(p)
+      try s.forEach(deleteRecursively(_)) finally s.close()
+    }
+    Files.deleteIfExists(p): Unit
+  }
 }

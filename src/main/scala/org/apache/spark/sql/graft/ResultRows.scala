@@ -44,20 +44,14 @@ object ResultRows {
     * in partition order by copying their row groups. */
   def rowsOrParquet(df: DataFrame, maxBytes: Long, maxRows: Long,
       dir: Path): Either[Seq[UnsafeRow], Path] = {
-    val session = df.sparkSession.asInstanceOf[SparkSession]
     val schema = df.schema
     val qe = df.queryExecution
-    // the writer's settings only (prepareWrite sets them from the SQL
-    // conf): they ship with every task, and the session's whole Hadoop
-    // conf would be ~100 KB and a copy per request
-    val job = Job.getInstance(new Configuration(false))
-    val factory = new ParquetFileFormat().prepareWrite(session, job, Map.empty, schema)
-    val conf = new SerializableConfiguration(job.getConfiguration)
+    val (factory, conf) = parquetWriter(df)
     val parts = SQLExecution.withNewExecutionId(qe, Some("collect")) {
       val rdd = qe.executedPlan.execute()
       val share = maxBytes / math.max(1, rdd.partitions.length)
       val base = dir.toString
-      session.sparkContext.runJob(rdd, (ctx: TaskContext, rows: Iterator[InternalRow]) =>
+      df.sparkSession.sparkContext.runJob(rdd, (ctx: TaskContext, rows: Iterator[InternalRow]) =>
         packOrWrite(rows, share, f"$base/part-${ctx.partitionId()}%05d.parquet",
           factory, conf, schema))
     }
@@ -83,6 +77,31 @@ object ResultRows {
         Right(out)
       }
     }
+  }
+
+  /** [[rowsOrParquet]]'s answer as one parquet file under `dir`, from the
+    * same single execution: rows that came back are written by the driver
+    * (an empty result too, as a file of the schema alone). Returns the
+    * file and whether the result is empty. */
+  def asParquet(df: DataFrame, maxBytes: Long, dir: Path): (Path, Boolean) =
+    rowsOrParquet(df, maxBytes, Long.MaxValue, dir) match {
+      case Right(file) => (file, false)
+      case Left(rows) =>
+        val file = dir.resolve("rows.parquet")
+        val (factory, conf) = parquetWriter(df)
+        writeRows(rows.iterator, file.toString, factory, conf, df.schema)
+        (file, rows.isEmpty)
+    }
+
+  /** The writer factory and settings a parquet save of `df` uses — the
+    * writer's settings only (prepareWrite sets them from the SQL conf):
+    * they ship with every task, and the session's whole Hadoop conf would
+    * be ~100 KB and a copy per request. */
+  private def parquetWriter(df: DataFrame): (OutputWriterFactory, SerializableConfiguration) = {
+    val job = Job.getInstance(new Configuration(false))
+    val factory = new ParquetFileFormat().prepareWrite(
+      df.sparkSession.asInstanceOf[SparkSession], job, Map.empty, df.schema)
+    (factory, new SerializableConfiguration(job.getConfiguration))
   }
 
   /** A task's half of [[rowsOrParquet]]: the partition's row count and

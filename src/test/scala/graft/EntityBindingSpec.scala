@@ -134,7 +134,9 @@ class EntityBindingSpec extends AnyFunSuite {
           // so every repeat follows a plan (a miss, in round one) of the
           // other session
           if (t == 1) await()
-          seen(t) += sessions(t).sql(text, Some("admin"))
+          sessions(t).sql(text, Some("admin"))
+          // each call binds a fresh Dataset; a hit is the memoized entity
+          seen(t) += sessions(t).resolveFor(text, Some("admin"), withProvenance = false)._2
           if (t == 0) await()
         } catch { case e: Throwable => failures.add(e); barrier.reset() }
       })
@@ -147,7 +149,7 @@ class EntityBindingSpec extends AnyFunSuite {
       val first = seen(t).take(texts(t).size)
       seen(t).grouped(texts(t).size).foreach { round =>
         round.zip(first).foreach { case (df, df0) =>
-          assert(df eq df0, s"session $t re-planned a repeated text")
+          assert(df eq df0, s"session $t re-resolved a repeated text")
         }
       }
     }

@@ -74,31 +74,36 @@ class PlanCacheSpec extends AnyFunSuite {
       defaultPermission = SourcePermission(Set("r_regionkey"), "true"))
     reg.upsertLocalSource("global", "pc_probe", src(Transformation.identity))
     val q = "select k from pc_probe order by k"
-    val df1 = session.sql(q)
-    val df2 = session.sql(q)
-    assert(df1 eq df2, "unchanged registry must hit the plan cache")
+    // every call binds a fresh Dataset over the memoized resolved entity:
+    // a hit is the entity plan's identity
+    def sqlAndEntity() = (session.sql(q),
+      session.resolveFor(q, None, withProvenance = false)._2.queryExecution.analyzed)
+    val (df1, e1) = sqlAndEntity()
+    val (df2, e2) = sqlAndEntity()
+    assert(e1 eq e2, "unchanged registry must reuse the resolved entity")
+    assert(!(df1 eq df2), "every call binds a fresh Dataset")
     assert(df2.agg(sum(col("k"))).head.getLong(0) == 10) // 0+1+2+3+4
     // admin upsert swaps the registry's Mesh value: the SAME text must
-    // re-resolve and see the new mapping — a stale cached plan would
+    // re-resolve and see the new mapping — a stale resolved entity would
     // still return the untransformed values
     reg.upsertLocalSource("global", "pc_probe", src(Transformation("{v} * 10")))
-    val df3 = session.sql(q)
-    assert(!(df3 eq df2), "mutation must invalidate the cached plan")
+    val (df3, e3) = sqlAndEntity()
+    assert(!(e3 eq e2), "mutation must invalidate the resolved entity")
     assert(df3.agg(sum(col("k"))).head.getLong(0) == 100)
     // the entity is bound into the plan by name, not read from the
     // session catalog: an unrelated temp view registered under the
-    // entity's name neither invalidates the cached plan nor changes it
-    val df4 = session.sql(q)
-    assert(df4 eq df3)
+    // entity's name neither invalidates the resolved entity nor changes it
+    val (_, e4) = sqlAndEntity()
+    assert(e4 eq e3)
     spark.range(1000).toDF("k").createOrReplaceTempView("pc_probe")
     try {
-      val df5 = session.sql(q)
-      assert(df5 eq df4, "a same-named temp view must not invalidate")
+      val (df5, e5) = sqlAndEntity()
+      assert(e5 eq e4, "a same-named temp view must not invalidate")
       assert(df5.agg(sum(col("k"))).head.getLong(0) == 100)
     } finally spark.catalog.dropTempView("pc_probe"): Unit
   }
 
-  test("MeshSession: a repeated text sees a wire peer's change (endpoint paths skip the cache)") {
+  test("MeshSession: a repeated text sees a wire peer's change on every execution") {
     import graft.transport.{RelayClient, RelayServer}
     Fixtures.registerRaw(spark, sfDir)
     def docsYaml(filter: String) =

@@ -805,9 +805,11 @@ class TransportSpec extends AnyFunSuite {
       val stub = Site("beta",
         entities = Map("documents" -> Fixtures.documentsEntity),
         endpoint = Some(url))
+      // resolving makes no wire call: the payload is checked when the
+      // first action plans the relay scan
       val err = intercept[IllegalStateException] {
         EntityResolver.resolve(
-          spark, alphaMesh(stub), "alpha", "documents", withProvenance = true)
+          spark, alphaMesh(stub), "alpha", "documents", withProvenance = true).collect()
       }
       assert(err.getMessage.contains("lacks"))
       assert(err.getMessage.contains(EntityResolver.SourceIdCol))
@@ -932,6 +934,33 @@ class TransportSpec extends AnyFunSuite {
       assert(parquetOnly.size == n)
       assert(fieldsOf(fetched) == parquetFields)
       assert(fetched.collect().toSeq == parquetOnly)
+    }
+  }
+
+  test("a multi-partition parquet-only answer keeps the Arrow answer's rows and order, from one execution") {
+    val src = DataSource(
+      id = "ranged_docs",
+      sourceSql = """SELECT id AS doc_id, concat('t', id) AS text, 'en' AS lang,
+                    |'gen' AS source, id AS n_chars FROM range(0, 400, 1, 4)""".stripMargin,
+      mappings = identityDocMappings,
+      defaultPermission = SourcePermission(docCols, "true"))
+    withServer(betaMesh(src), "beta") { server =>
+      val sql = "SELECT doc_id, text FROM documents WHERE doc_id % 7 <> 3"
+      assert(new MeshSession(spark, betaMesh(src), "beta").sql(sql).rdd.getNumPartitions > 1)
+      val viaArrow = syncFetch(server.url, sql)
+      assert(decodedInMemory(viaArrow))
+      val (resp, runs) = withExecutions(postSync(server.url, sql, ParquetType))
+      assert(runs.size == 1, runs)
+      assert(resp.statusCode() == 200)
+      assert(resp.headers().firstValue("Content-Type").get == ParquetType)
+      val f = java.nio.file.Files.createTempFile("graft_spec_", ".parquet")
+      java.nio.file.Files.write(f, resp.body())
+      try {
+        val parquetOnly = spark.read.parquet(f.toString)
+        assert(fieldsOf(parquetOnly) == fieldsOf(viaArrow))
+        assert(parquetOnly.collect().toSeq == viaArrow.collect().toSeq)
+        assert(parquetOnly.count() == 400 - 57)
+      } finally java.nio.file.Files.delete(f)
     }
   }
 

@@ -30,46 +30,37 @@ object Fixtures {
     "events", "documents", "embeddings")
 
   /** Register the raw physical parquet tables as temp views, once per
-    * (session, sfDir): under their bare names and `raw_`-prefixed (source
-    * SQL reads the prefixed names). Mesh and query paths bind entities by
-    * name for one query and register nothing, so these views are never
-    * shadowed and need no re-assert.
+    * (session, sfDir) ([[graft.SessionArtifacts]] `raw`): under their bare
+    * names and `raw_`-prefixed (source SQL reads the prefixed names). Mesh
+    * and query paths bind entities by name for one query and register
+    * nothing, so these views are never shadowed and need no re-assert.
     *
     * `events.parquet` stores `ts` as parquet TIMESTAMP(NANOS), which Spark's
     * vectorized reader rejects; read it as nanos-long and truncate to
     * microsecond TimestampType (matching DuckDB's ns->us semantics). */
-  private val rawDfCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Seq[(String, org.apache.spark.sql.DataFrame)]]
-  private val rawDfLock = new Object
-
   def registerRaw(spark: SparkSession, sfDir: String): Unit = {
     // library-native SQL functions ride along with the raw tables: any
     // session that can see `documents` can call vec_dot/word_ngrams
     graft.functions.VectorFunctions.register(spark)
     graft.functions.TextFunctions.register(spark)
-    rawDfLock.synchronized {
-      if (!rawDfCache.contains((spark, sfDir))) {
-        rawDfCache.filterKeys(_._1 eq spark).keys.foreach(rawDfCache.remove)
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val built = RawTables.map { t =>
-          // LocalLayout: opt-in (SPARK_GRAFT_COMPACT=1) row-group
-          // compaction for scan parallelism; default passthrough — see
-          // LocalLayout's doc for the measured trade-off
-          val df = graft.sources.LocalLayout.parquet(spark, s"$sfDir/$t.parquet")
-          val fixed =
-            if (t == "events" && df.schema("ts").dataType == org.apache.spark.sql.types.LongType)
-              df.withColumn("ts",
-                org.apache.spark.sql.functions.expr("timestamp_micros(ts div 1000)"))
-            else if (t == "events")
-              df.withColumn("ts",
-                org.apache.spark.sql.functions.col("ts")
-                  .cast(org.apache.spark.sql.types.TimestampType))
-            else df
-          fixed.createOrReplaceTempView(t)
-          fixed.createOrReplaceTempView(s"raw_$t")
-          t -> fixed
-        }
-        rawDfCache.put((spark, sfDir), built)
+    graft.SessionArtifacts(spark, sfDir, "raw") {
+      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      RawTables.foreach { t =>
+        // LocalLayout: opt-in (SPARK_GRAFT_COMPACT=1) row-group
+        // compaction for scan parallelism; default passthrough — see
+        // LocalLayout's doc for the measured trade-off
+        val df = graft.sources.LocalLayout.parquet(spark, s"$sfDir/$t.parquet")
+        val fixed =
+          if (t == "events" && df.schema("ts").dataType == org.apache.spark.sql.types.LongType)
+            df.withColumn("ts",
+              org.apache.spark.sql.functions.expr("timestamp_micros(ts div 1000)"))
+          else if (t == "events")
+            df.withColumn("ts",
+              org.apache.spark.sql.functions.col("ts")
+                .cast(org.apache.spark.sql.types.TimestampType))
+          else df
+        fixed.createOrReplaceTempView(t)
+        fixed.createOrReplaceTempView(s"raw_$t")
       }
     }
   }
@@ -266,11 +257,6 @@ object Fixtures {
       "emea" -> emea, "apac" -> apac))
   }
 
-  // keyed by the session object itself (an identityHashCode can collide
-  // across sessions and would hand back a DataFrame bound to the wrong one)
-  private val viewCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Option[String], Boolean), DataFrame]
-
   /** Convenience: the fully-resolved lineitem view from `global` for `user`.
     * Memoized per (session, sfDir, user, provenance) — resolution is pure
     * plan construction. */
@@ -279,8 +265,7 @@ object Fixtures {
       user: Option[String] = Some("admin"),
       withProvenance: Boolean = false): DataFrame = {
     registerRaw(spark, sfDir)
-    viewCache.getOrElseUpdate(
-      (spark, sfDir, user, withProvenance),
+    graft.SessionArtifacts(spark, sfDir, s"lineitemView:$user:$withProvenance")(
       EntityResolver.resolve(spark, mesh, "global", "lineitem", user, withProvenance))
   }
 
@@ -289,15 +274,5 @@ object Fixtures {
       user: Option[String] = Some("admin")): DataFrame = {
     registerRaw(spark, sfDir)
     EntityResolver.resolve(spark, mesh, "global", entity, user)
-  }
-
-  /** The memoized raw-table frame set — the [[graft.queries.PlanCache]]
-    * scope object for plans that resolve straight over the raw views
-    * (q6's per-site partials, q8's telemetry entity): rebuilt only when
-    * [[registerRaw]] rebuilds the frames for a new (session, sf), which
-    * is exactly when a dependent cached plan must re-analyze. */
-  def rawScope(spark: SparkSession, sfDir: String): AnyRef = {
-    registerRaw(spark, sfDir)
-    rawDfCache((spark, sfDir))
   }
 }

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.SessionArtifacts
 import graft.mesh.Fixtures
 
 /** Large-scale training-data pipeline operators (BASELINE.json north star):
@@ -2581,38 +2582,6 @@ object PipelineQueries {
         |  CAST(sum(CASE WHEN s_u < 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_negative
         |FROM su GROUP BY label ORDER BY label""".stripMargin))
 
-  /** Encoded multimodal corpus per (session, sf): see mm2 note. Bounded:
-    * switching a session to a new sf dir unpersists and drops its previous
-    * entry, so a long-lived process pins at most one corpus per session. */
-  private val mediaCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), org.apache.spark.sql.Dataset[Multimodal.MediaRecord]]
-
-  private val cacheLock = new Object
-
-  /** Encoded video / audio corpora (mm3/mm4): fixture synthesis like the
-    * mm2 media table — memoized so the measured work is the decode path. */
-  private val videoCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), org.apache.spark.sql.Dataset[Multimodal.VideoRecord]]
-  private val audioCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), org.apache.spark.sql.Dataset[Multimodal.AudioRecord]]
-
-  // plain lock, not getOrElseUpdate: concurrent first calls must not
-  // each persist a corpus (the loser's would stay pinned unreachably),
-  // and eviction + insert must be atomic for the one-per-session bound
-  private def cachedDataset[T](
-      cache: scala.collection.concurrent.TrieMap[(SparkSession, String), org.apache.spark.sql.Dataset[T]],
-      s: SparkSession, dir: String)(build: => org.apache.spark.sql.Dataset[T]) =
-    cacheLock.synchronized {
-      cache.getOrElse((s, dir), {
-        cache.filterKeys(_._1 eq s).foreach { case (k, ds) =>
-          ds.unpersist(); cache.remove(k)
-        }
-        val ds = build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        cache.put((s, dir), ds)
-        ds
-      })
-    }
-
   /** Media corpora read the PHYSICAL parquet, not the `documents` temp
     * view: mesh queries shadow + re-assert that view constantly, and a
     * cached plan that references a replaced view gets uncached by the
@@ -2626,49 +2595,56 @@ object PipelineQueries {
     graft.sources.LocalLayout.parquet(s, s"$dir/documents.parquet")
       .repartition(s.sparkContext.defaultParallelism)
 
+  /** Encoded multimodal corpora (mm2 media, mm3 video, mm4 audio):
+    * fixture synthesis, persisted [[SessionArtifacts]] so the measured
+    * work is the decode path. */
   private def cachedMedia(s: SparkSession, dir: String) =
-    cachedDataset(mediaCache, s, dir)(Multimodal.toMediaRecords(s, mediaDocs(s, dir)))
+    SessionArtifacts.persisted(s, dir, "media")(
+      Multimodal.toMediaRecords(s, mediaDocs(s, dir)))
 
   private def cachedVideo(s: SparkSession, dir: String) =
-    cachedDataset(videoCache, s, dir)(Multimodal.toVideoRecords(s, mediaDocs(s, dir)))
+    SessionArtifacts.persisted(s, dir, "video")(
+      Multimodal.toVideoRecords(s, mediaDocs(s, dir)))
 
   private def cachedAudio(s: SparkSession, dir: String) =
-    cachedDataset(audioCache, s, dir)(Multimodal.toAudioRecords(s, mediaDocs(s, dir)))
+    SessionArtifacts.persisted(s, dir, "audio")(
+      Multimodal.toAudioRecords(s, mediaDocs(s, dir)))
 
-  /** Learned IVF centroids per (session, sf) — lazy, independent of the
-    * PQ codebooks so ss3 never pays for training it does not use. */
+  /** Learned IVF centroids (k x dim doubles of driver-side model state)
+    * — lazy, independent of the PQ codebooks so ss3 never pays for
+    * training it does not use. */
   private def annCentroids(
       s: SparkSession, dir: String,
       emb: org.apache.spark.sql.DataFrame): Seq[Seq[Double]] =
-    cacheLock.synchronized {
-      centroidCache.getOrElse((s, dir), {
-        centroidCache.filterKeys(_._1 eq s).keys.foreach(centroidCache.remove)
-        val m = Similarity.sphericalKMeans(
-          emb, "vec_id", "embedding", seedIds = 0L until 16L, iters = 2)
-        centroidCache.put((s, dir), m)
-        // spill the centroid model state for the stored-state oracle HERE,
-        // by whoever first learns it: a Verify subset running ss3 alone
-        // must produce a fresh centroids artifact without depending on
-        // ss5/ss6's index build having run in the same session
-        import s.implicits._
-        m.zipWithIndex.map { case (w, i) => (i, w) }.toDF("cid", "w")
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"${annArtifactDir(dir)}/centroids.parquet")
-        m
-      })
+    SessionArtifacts(s, dir, "ivfCentroids") {
+      val m = Similarity.sphericalKMeans(
+        emb, "vec_id", "embedding", seedIds = 0L until 16L, iters = 2)
+      // spill the centroid model state for the stored-state oracle HERE,
+      // by whoever first learns it: a Verify subset running ss3 alone
+      // must produce a fresh centroids artifact without depending on
+      // ss5/ss6's index build having run in the same session
+      import s.implicits._
+      m.zipWithIndex.map { case (w, i) => (i, w) }.toDF("cid", "w")
+        .coalesce(1).write.mode("overwrite")
+        .parquet(s"${annArtifactDir(dir)}/centroids.parquet")
+      m
     }
 
-  /** Learned PQ codebooks per (session, sf) — lazy, symmetric. */
+  /** Learned PQ codebooks (nSub x k x subDim doubles of driver-side model
+    * state) — lazy, symmetric; spilled for the oracle like the
+    * centroids. */
   private def annBooks(
       s: SparkSession, dir: String,
       emb: org.apache.spark.sql.DataFrame): Seq[Seq[Seq[Double]]] =
-    cacheLock.synchronized {
-      pqBookCache.getOrElse((s, dir), {
-        pqBookCache.filterKeys(_._1 eq s).keys.foreach(pqBookCache.remove)
-        val m = Similarity.pqTrain(emb, "vec_id", "embedding")
-        pqBookCache.put((s, dir), m)
-        m
-      })
+    SessionArtifacts(s, dir, "pqBooks") {
+      val m = Similarity.pqTrain(emb, "vec_id", "embedding")
+      import s.implicits._
+      m.zipWithIndex.flatMap { case (bk, si) =>
+        bk.zipWithIndex.map { case (w, c) => (si, c, w) }
+      }.toDF("s", "c", "w")
+        .coalesce(1).write.mode("overwrite")
+        .parquet(s"${annArtifactDir(dir)}/books.parquet")
+      m
     }
 
   /** Root for the stored-ANN-index parity artifacts: the encoded PQ index,
@@ -2684,167 +2660,85 @@ object PipelineQueries {
   private[graft] def annArtifactDir(dir: String): String =
     s"/tmp/graft_ann/${new java.io.File(dir).getName}"
 
-  private val annArtifactsWritten = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Boolean]
-
-  /** ONE persisted encoded-index copy (codes + cell id) serves both the
-    * flat-PQ and IVF+PQ queries — pqTopK ignores the extra cid column.
-    * First build per (session, sf) also spills the index + model state to
-    * [[annArtifactDir]] for the oracle (tiny: |corpus| 20-byte rows plus
-    * a few KB of model). */
+  /** Encoded ANN index state (codes + cell id) — in production these are
+    * stored table columns, so the measured work is the serving scan, not
+    * re-encoding. ONE persisted copy serves both the flat-PQ and IVF+PQ
+    * queries: pqTopK ignores the extra cid column, and the IVF cell id is
+    * a pure projection over it (Similarity.withCells). Its build spills
+    * the index to [[annArtifactDir]] for the oracle (tiny: |corpus|
+    * 20-byte rows). */
   private def annIndex(
       s: SparkSession, dir: String,
-      emb: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val ds = cachedDataset(pqIndexCache, s, dir)(
+      emb: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    SessionArtifacts.persisted(s, dir, "pqIndex",
+      (ds: org.apache.spark.sql.DataFrame) => {
+        import org.apache.spark.sql.functions.col
+        ds.select(col("__id").as("vec_id"), col("codes"), col("nrm"), col("cid"))
+          .coalesce(1).write.mode("overwrite")
+          .parquet(s"${annArtifactDir(dir)}/index.parquet")
+      })(
       Similarity.ivfPqEncode(emb, "vec_id", "embedding",
         annCentroids(s, dir, emb), annBooks(s, dir, emb)))
-    cacheLock.synchronized {
-      annArtifactsWritten.getOrElseUpdate((s, dir), {
-        import org.apache.spark.sql.functions.col
-        import s.implicits._
-        val out = annArtifactDir(dir)
-        ds.select(col("__id").as("vec_id"), col("codes"), col("nrm"), col("cid"))
-          .coalesce(1).write.mode("overwrite").parquet(s"$out/index.parquet")
-        annBooks(s, dir, emb).zipWithIndex.flatMap { case (bk, si) =>
-          bk.zipWithIndex.map { case (w, c) => (si, c, w) }
-        }.toDF("s", "c", "w")
-          .coalesce(1).write.mode("overwrite").parquet(s"$out/books.parquet")
-        // centroids.parquet is written by annCentroids (already forced via
-        // the ivfPqEncode build above)
-        true
-      })
-    }
-    ds
-  }
 
-  /** Learned IVF centroids per (session, sf): see ss3 note. Driver-side
-    * model state only (k x dim doubles), same one-entry-per-session bound. */
-  private val centroidCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Seq[Seq[Double]]]
-
-  /** Learned PQ codebooks per (session, sf): see ss5 note. Driver-side
-    * model state only (nSub x k x subDim doubles). */
-  private val pqBookCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Seq[Seq[Seq[Double]]]]
-
-  /** Encoded ANN index state (codes) per (session, sf) — in production
-    * these are stored table columns, so the measured work is the serving
-    * scan, not re-encoding. ONE persisted copy: the IVF cell id is a pure
-    * projection over it (Similarity.withCells), so ss6 shares ss5's. */
-  private val pqIndexCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), org.apache.spark.sql.Dataset[org.apache.spark.sql.Row]]
-
-  /** Materialized near-dup pair index per (session, sf): see dd7 note. */
-  private val pairCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
-  /** Verified minhash-LSH pair list, computed once per (session, sf) and
-    * shared by every graph consumer (dd7 clusters, gr1 pagerank) — in
-    * production the pair list is a stored artifact of the dedup run, so
-    * downstream graph passes re-reading it is the honest serving shape. */
+  /** Verified minhash-LSH pair list, shared by every graph consumer (dd7
+    * clusters, gr1 pagerank) — in production the pair list is a stored
+    * artifact of the dedup run, so downstream graph passes re-reading it
+    * is the honest serving shape. */
   private def cachedPairs(s: SparkSession, dir: String): DataFrame =
-    cacheLock.synchronized {
-      pairCache.getOrElse((s, dir), {
-        pairCache.filterKeys(_._1 eq s).keys.foreach(pairCache.remove)
-        val p = Dedup.minhashLshPairs(s.table("documents"), "doc_id", "text")
-          .localCheckpoint()
-        pairCache.put((s, dir), p)
-        p
-      })
-    }
+    SessionArtifacts(s, dir, "pairs")(
+      Dedup.minhashLshPairs(s.table("documents"), "doc_id", "text")
+        .localCheckpoint())
 
-  /** Cluster labeling per (session, sf): dd7's connected-components
-    * output, a stored artifact of the dedup run exactly like the pair
-    * list above — sp8's split serves from it. */
-  private val clusterCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
+  /** Cluster labeling: dd7's connected-components output, a stored
+    * artifact of the dedup run exactly like the pair list above — sp8's
+    * split serves from it. */
   private def cachedClusters(s: SparkSession, dir: String): DataFrame =
-    cacheLock.synchronized {
-      clusterCache.getOrElse((s, dir), {
-        clusterCache.filterKeys(_._1 eq s).keys.foreach(clusterCache.remove)
-        val c = Dedup.connectedComponents(cachedPairs(s, dir)).localCheckpoint()
-        clusterCache.put((s, dir), c)
-        c
-      })
-    }
+    SessionArtifacts(s, dir, "clusters")(
+      Dedup.connectedComponents(cachedPairs(s, dir)).localCheckpoint())
 
-  /** tok2's trained BPE merge table per (session, sf): driver-side model
-    * state (10 string pairs), same contract as the centroid caches. */
-  private val mergeCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Seq[(String, String)]]
-
-  private val mergesWritten = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Boolean]
-
-  /** tok3's trained unigram vocabulary per (session, sf): driver-side
-    * model state (~300 (piece, micro-log) entries). No spill needed —
-    * unlike the BPE merge table, the vocabulary is a pure deterministic
-    * function of the corpus, so the oracle re-derives it in SQL. */
-  private val unigramVocabCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Map[String, Long]]
-
+  /** tok3's trained unigram vocabulary: driver-side model state (~300
+    * (piece, micro-log) entries). No spill needed — unlike the BPE merge
+    * table, the vocabulary is a pure deterministic function of the
+    * corpus, so the oracle re-derives it in SQL. */
   private def cachedUnigramVocab(s: SparkSession, dir: String): Map[String, Long] =
-    cacheLock.synchronized {
-      unigramVocabCache.getOrElseUpdate((s, dir),
-        TextAnalysis.unigramVocab(s.table("documents"), "doc_id", "text")
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
-    }
+    SessionArtifacts(s, dir, "unigramVocab")(
+      TextAnalysis.unigramVocab(s.table("documents"), "doc_id", "text")
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
 
+  /** tok2's trained BPE merge table: driver-side model state (10 string
+    * pairs), same contract as the centroids. */
   private def cachedMerges(s: SparkSession, dir: String): Seq[(String, String)] =
-    cacheLock.synchronized {
-      val ms = mergeCache.getOrElseUpdate((s, dir),
-        TextAnalysis.bpeTrain(s.table("documents"), "doc_id", "text", 10)._1)
+    SessionArtifacts(s, dir, "bpeMerges") {
+      val ms = TextAnalysis.bpeTrain(s.table("documents"), "doc_id", "text", 10)._1
       // Spill the merge table next to the ANN artifacts (same contract:
       // trained model state is WRITTEN state, and tok2's oracle replays
       // serving from it — Verify clears the dir up front so the oracle
       // can only ever replay merges trained by its own run).
-      mergesWritten.getOrElseUpdate((s, dir), {
-        import s.implicits._
-        ms.zipWithIndex.map { case ((a, b), i) => (i, a, b) }
-          .toDF("idx", "left_tok", "right_tok")
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"${annArtifactDir(dir)}/merges.parquet")
-        true
-      })
+      import s.implicits._
+      ms.zipWithIndex.map { case ((a, b), i) => (i, a, b) }
+        .toDF("idx", "left_tok", "right_tok")
+        .coalesce(1).write.mode("overwrite")
+        .parquet(s"${annArtifactDir(dir)}/merges.parquet")
       ms
     }
-
-  /** sd1's seed centroids per (session, sf): driver-side model state only
-    * (16 x 64 floats + norms), same contract as centroidCache. */
-  private val sdCentCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Seq[(Long, Seq[Float], Double)]]
-
-  /** Encoded int8 index (ss4): same encode-once-serve-many contract as the
-    * PQ/IVF-PQ index state — in production the quantized columns live in
-    * the stored table, so the measured work is the serving scan. */
-  private val sq8Cache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), org.apache.spark.sql.Dataset[org.apache.spark.sql.Row]]
 
   /** IVF cell assignment (ss10): the coarse-quantizer index — stored
     * table state like the sq8/PQ codes (build once, serve many). Reads
     * the PHYSICAL parquet, not the temp view, for the same view-churn
     * immunity as the media caches (see mediaDocs). */
-  private val ivfAssignCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), org.apache.spark.sql.Dataset[org.apache.spark.sql.Row]]
-
   private def cachedIvfAssign(s: SparkSession, dir: String) =
-    cachedDataset(ivfAssignCache, s, dir)(
+    SessionArtifacts.persisted(s, dir, "ivfAssign")(
       Similarity.ivfAssign(
         graft.sources.LocalLayout.parquet(s, s"$dir/embeddings.parquet"),
         "vec_id", "embedding", centroidIds = 0L until 16L))
 
   /** dd11's stored corpus band index (doc_id % 10 != 0 = the already-
-    * ingested corpus), cached per (session, sf) like the IVF assignment —
-    * in production this is a table written once per corpus generation,
-    * so the measured ingest work must be the batch probe, not an index
-    * rebuild per run. dd12's signature index and mm9's phash band index
-    * follow the same contract. */
-  private val bandIndexCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), org.apache.spark.sql.Dataset[org.apache.spark.sql.Row]]
-
+    * ingested corpus) — in production this is a table written once per
+    * corpus generation, so the measured ingest work must be the batch
+    * probe, not an index rebuild per run. dd12's signature index and
+    * mm9's phash band index follow the same contract. */
   private def cachedBandIndex(s: SparkSession, dir: String) =
-    cachedDataset(bandIndexCache, s, dir)(
+    SessionArtifacts.persisted(s, dir, "bandIndex")(
       Dedup.bandIndex(
         graft.sources.LocalLayout.parquet(s, s"$dir/documents.parquet")
           .where(org.apache.spark.sql.functions.col("doc_id") % 10 =!= 0),
@@ -2852,14 +2746,11 @@ object PipelineQueries {
 
   /** dd13's merged GENERATION 1: base corpus (doc_id % 10 NOT IN (0, 5))
     * indexed once, batch1 (% 10 = 5) folded in by appendToBandIndex —
-    * only batch1 is banded at the merge. Cached as stored state so dd13
+    * only batch1 is banded at the merge. Held as stored state so dd13
     * measures the batch2 probe against the merged generation, the
     * rolling-pipeline serve path. */
-  private val mergedIndexCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), org.apache.spark.sql.Dataset[org.apache.spark.sql.Row]]
-
   private def cachedMergedIndex(s: SparkSession, dir: String) =
-    cachedDataset(mergedIndexCache, s, dir) {
+    SessionArtifacts.persisted(s, dir, "mergedBandIndex") {
       import org.apache.spark.sql.functions.col
       val docs = graft.sources.LocalLayout.parquet(s, s"$dir/documents.parquet")
       Dedup.appendToBandIndex(
@@ -2873,14 +2764,11 @@ object PipelineQueries {
     * way a long-lived pipeline actually holds it — generation 0 written
     * to disk, batch1 folded in as an append-files delta, then the
     * accumulated file-sets rewritten by IndexMaintenance.compactIndex
-    * (bit-equal rows, one compacted layout). Cached per (session, sf) as
-    * the read-back of the compacted store, so dd15 measures the batch2
-    * probe against post-maintenance stored state. */
-  private val compactedIndexCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), org.apache.spark.sql.Dataset[org.apache.spark.sql.Row]]
-
+    * (bit-equal rows, one compacted layout). Held as the read-back of
+    * the compacted store, so dd15 measures the batch2 probe against
+    * post-maintenance stored state. */
   private def cachedCompactedIndex(s: SparkSession, dir: String) =
-    cachedDataset(compactedIndexCache, s, dir) {
+    SessionArtifacts.persisted(s, dir, "compactedBandIndex") {
       import org.apache.spark.sql.functions.col
       val docs = graft.sources.LocalLayout.parquet(s, s"$dir/documents.parquet")
       val root = java.nio.file.Files.createTempDirectory("graft_dd15").toString
@@ -2900,13 +2788,9 @@ object PipelineQueries {
     * over the corpus-internal pair list) — the dedup decision artifact a
     * rolling pipeline holds between generations; the ingest merges new
     * pairs into it by label-graph contraction instead of re-clustering
-    * the corpus. Cached per (session, sf) like the band index it pairs
-    * with. */
-  private val corpusClusterCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), org.apache.spark.sql.Dataset[org.apache.spark.sql.Row]]
-
+    * the corpus. Held like the band index it pairs with. */
   private def cachedCorpusClusters(s: SparkSession, dir: String) =
-    cachedDataset(corpusClusterCache, s, dir) {
+    SessionArtifacts.persisted(s, dir, "corpusClusters") {
       import org.apache.spark.sql.functions.col
       Dedup.connectedComponents(
         Dedup.minhashLshPairs(
@@ -2915,21 +2799,15 @@ object PipelineQueries {
           "doc_id", "text"))
     }
 
-  private val simhashIndexCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), org.apache.spark.sql.Dataset[org.apache.spark.sql.Row]]
-
   private def cachedSimhashIndex(s: SparkSession, dir: String) =
-    cachedDataset(simhashIndexCache, s, dir)(
+    SessionArtifacts.persisted(s, dir, "simhashIndex")(
       Dedup.simhashIndex(
         graft.sources.LocalLayout.parquet(s, s"$dir/documents.parquet")
           .where(org.apache.spark.sql.functions.col("doc_id") % 10 =!= 0),
         "doc_id", "text"))
 
-  private val phashIndexCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), org.apache.spark.sql.Dataset[org.apache.spark.sql.Row]]
-
   private def cachedPhashIndex(s: SparkSession, dir: String) =
-    cachedDataset(phashIndexCache, s, dir)(
+    SessionArtifacts.persisted(s, dir, "phashIndex")(
       Multimodal.phashBandIndex(Multimodal.toMediaRecords(s,
         mediaDocs(s, dir)
           // mm9 splits on % 5 = 2 (not dd11's % 10): the sf0.01 fixture's
@@ -2939,14 +2817,11 @@ object PipelineQueries {
 
   /** mm10's merged phash GENERATION 1: base media corpus (doc_id % 5
     * NOT IN (1, 2)) indexed once, batch1 (% 5 = 1) folded in by
-    * appendToPhashIndex — only batch1 decodes at the merge. Cached as
+    * appendToPhashIndex — only batch1 decodes at the merge. Held as
     * stored state so mm10 measures the batch2 probe against the merged
     * generation (dd13's contract, on the image side). */
-  private val mergedPhashCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), org.apache.spark.sql.Dataset[org.apache.spark.sql.Row]]
-
   private def cachedMergedPhashIndex(s: SparkSession, dir: String) =
-    cachedDataset(mergedPhashCache, s, dir) {
+    SessionArtifacts.persisted(s, dir, "mergedPhashIndex") {
       import org.apache.spark.sql.functions.col
       Multimodal.appendToPhashIndex(
         Multimodal.phashBandIndex(Multimodal.toMediaRecords(s,
@@ -3297,10 +3172,10 @@ object PipelineQueries {
       // k scales with the corpus (targetK, fixture-scaled target=256) so
       // the pair envelope stays linear; the count + seed collection are
       // INDEX BUILD, memoized with the centroids themselves
-      val cents = sdCentCache.getOrElseUpdate((s, dir), {
+      val cents = SessionArtifacts(s, dir, "sd1Seeds") {
         val k = Similarity.targetK(emb.count(), targetClusterSize = 256)
         Similarity.seedCentroids(emb, "vec_id", "embedding", 0L until k.toLong)
-      })
+      }
       Similarity.semanticDedupSeeded(emb, "vec_id", "embedding", cents)
     }),
 
@@ -3356,7 +3231,7 @@ object PipelineQueries {
     // interpreted quantization lambdas on both sides of the join.
     "ss4_quantized_topk" -> ((s: SparkSession, dir: String) => {
       Fixtures.registerRaw(s, dir)
-      val enc = cachedDataset(sq8Cache, s, dir)(
+      val enc = SessionArtifacts.persisted(s, dir, "sq8Index")(
         Similarity.sq8Encode(s.table("embeddings"), "vec_id", "embedding"))
       Similarity.sq8TopK(enc, queryIds = 0L to 4L, k = 5)
     }),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 
+import graft.SessionArtifacts
 import graft.mesh.Fixtures
 
 /** Mesh-semantics queries (SURVEY §2.4): rewrite operators R5-R14 observable
@@ -13,15 +14,15 @@ import graft.mesh.Fixtures
   */
 object MeshQueries {
 
-  /** Analysis-plan cached (round-16): `lineitem_entity` is bound to the
-    * MEMOIZED resolved view for `user` (the scope object), and the SQL is
-    * analyzed again only when that view changes. Results still compute
-    * from parquet on every action (PlanCacheSpec). */
+  /** Plan memoized (round-16): `lineitem_entity` is bound to the
+    * MEMOIZED resolved view for `user`, and the SQL is analyzed once per
+    * (session, dir). Every call binds a fresh Dataset that computes from
+    * parquet (PlanCacheSpec). */
   private def meshSql(user: Option[String], sql: String)(
       s: SparkSession, dir: String): DataFrame = {
-    val view = Fixtures.lineitemView(s, dir, user)
-    PlanCache.of(s, s"mesh:$dir:${user.getOrElse("")}:$sql", view) {
-      ColumnBridge.bind(s, sql, Map("lineitem_entity" -> view))
+    SessionArtifacts.plan(s, dir, s"mesh:$user:$sql") {
+      ColumnBridge.bind(s, sql,
+        Map("lineitem_entity" -> Fixtures.lineitemView(s, dir, user)))
     }
   }
 
@@ -57,8 +58,8 @@ object MeshQueries {
         |ORDER BY returnflag, linestatus""".stripMargin)(s, dir)),
 
     "q5_provenance_counts" -> { (s, dir) =>
-      val view = Fixtures.lineitemView(s, dir, Some("admin"), withProvenance = true)
-      PlanCache.of(s, s"mesh:$dir:q5", view) {
+      SessionArtifacts.plan(s, dir, "mesh:q5") {
+        val view = Fixtures.lineitemView(s, dir, Some("admin"), withProvenance = true)
         ColumnBridge.bind(s,
           """SELECT _source_relay_, _source_id_, count(*) AS n,
             |       round(sum(CAST(round(tax_amount * 100) AS BIGINT)) / CAST(100 AS DOUBLE), 2) AS sum_tax
@@ -75,10 +76,11 @@ object MeshQueries {
     // global weighted average). Runs the full grouped query per leaf site,
     // unions the partials, then re-aggregates.
     "q6_partial_recombine" -> { (s, dir) =>
-      // plan-cached on the raw-frame scope: the three per-site
-      // resolutions are pure plan construction over the memoized raw
-      // views (~100 ms of driver time per invocation)
-      PlanCache.of(s, s"mesh:$dir:q6", Fixtures.rawScope(s, dir)) {
+      // plan memoized: the three per-site resolutions are pure plan
+      // construction over the memoized raw views (~100 ms of driver time
+      // per invocation)
+      SessionArtifacts.plan(s, dir, "mesh:q6") {
+        Fixtures.registerRaw(s, dir)
         val mesh = Fixtures.mesh
         val partials = Seq("na", "emea", "apac").map { site =>
           graft.mesh.EntityResolver.resolve(s, mesh, site, "lineitem", Some("admin"))
@@ -105,7 +107,8 @@ object MeshQueries {
     // `$.props.k` (rendered as get_json_object over the physical column;
     // `core/src/model/data_stores/mod.rs:55-62`).
     "q8_jsonpath_field" -> { (s, dir) =>
-      PlanCache.of(s, s"mesh:$dir:q8", Fixtures.rawScope(s, dir)) {
+      SessionArtifacts.plan(s, dir, "mesh:q8") {
+        Fixtures.registerRaw(s, dir)
         ColumnBridge.bind(s,
           """SELECT event_type, count(*) AS n, sum(k) AS sum_k
             |FROM telemetry_entity

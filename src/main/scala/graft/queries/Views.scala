@@ -46,28 +46,21 @@ object Views {
       |       CAST(o_orderdate AS DATE) AS orderdate,
       |       o_orderpriority AS orderpriority FROM orders""".stripMargin
 
-  // resolved-entity plans memoized per (session, sf): resolution is pure
-  // plan construction (5-site walk, per-branch SQL analysis, ACL probes —
-  // ~100ms of driver time), and the resolved DataFrame captures its plan
-  // eagerly, so one resolution serves every later query
-  private val resolvedCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Map[String, DataFrame]]
-
   /** The lineitem/customer/orders entities resolved from `global` for the
     * all-access user, keyed by the names SQL-surface queries bind them to
     * (`lineitem_entity`, `customer_entity`, `orders_entity`); the raw
-    * physical tables are registered too. Memoized per (session, sf), and
-    * the returned map instance is the [[PlanCache]] scope of every
-    * SqlSurface plan: a re-resolution (new session/sf) swaps the instance
-    * and every dependent cached plan misses. */
+    * physical tables are registered too. Memoized per (session, sf)
+    * ([[graft.SessionArtifacts]] `entities`): resolution is pure plan
+    * construction (5-site walk, per-branch SQL analysis, ACL probes —
+    * ~100ms of driver time), and the resolved DataFrame captures its plan
+    * eagerly, so one resolution serves every later query. */
   def entities(spark: SparkSession, sfDir: String): Map[String, DataFrame] = {
     Fixtures.registerRaw(spark, sfDir)
-    resolvedCache.getOrElseUpdate((spark, sfDir), {
-      resolvedCache.filterKeys(_._1 eq spark).keys.foreach(resolvedCache.remove)
+    graft.SessionArtifacts(spark, sfDir, "entities") {
       val admin = Some("admin")
       Seq("lineitem", "customer", "orders").map { e =>
         s"${e}_entity" -> EntityResolver.resolve(spark, Fixtures.mesh, "global", e, admin)
       }.toMap
-    })
+    }
   }
 }

@@ -6,37 +6,53 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.catalog._
 import graft.mesh.{Fixtures, MeshRegistry, MeshSession}
-import graft.queries.PlanCache
 
-/** The round-16 analysis-plan cache: plans (never rows) are memoized per
-  * (session, key) against a scope object's reference identity — so a hit
-  * must return the SAME frame, a registry mutation or scope swap must
-  * re-analyze, and every action on a cached plan must still execute from
-  * the parquet sources. */
+/** The round-16 analysis-plan memo ([[SessionArtifacts.plan]]): plans
+  * (never rows) are memoized per (session, dir, key) — so a hit must bind
+  * the SAME plan, a registry mutation must re-analyze, and every call's
+  * Dataset must execute from the sources again. */
 class PlanCacheSpec extends AnyFunSuite {
 
   lazy val spark = TestSessions.spark
   private def sfDir = TestSessions.sfDir
 
-  test("hit returns the same plan instance; scope swap rebuilds") {
-    val scopeA = new Object
+  test("hit returns the same plan instance") {
     var builds = 0
     def build() = { builds += 1; spark.range(3).toDF("n") }
-    val df1 = PlanCache.of(spark, "spec:key1", scopeA)(build())
-    val df2 = PlanCache.of(spark, "spec:key1", scopeA)(build())
-    assert(df1 eq df2)
+    val df1 = SessionArtifacts.plan(spark, sfDir, "spec:key1")(build())
+    val df2 = SessionArtifacts.plan(spark, sfDir, "spec:key1")(build())
+    assert(df1.queryExecution.logical eq df2.queryExecution.logical)
     assert(builds == 1)
-    val scopeB = new Object
-    val df3 = PlanCache.of(spark, "spec:key1", scopeB)(build())
-    assert(builds == 2)
-    assert(!(df3 eq df1))
+  }
+
+  test("a cached plan re-reads its sources on every call") {
+    // a source UDF under an aggregate over a shuffle: one Dataset run
+    // twice would serve the second collect from the first run's shuffle
+    // output and call the UDF zero times
+    val calls = spark.sparkContext.longAccumulator("plan_reread_calls")
+    val probe = udf { (n: Long) => calls.add(1); n % 7 }.asNondeterministic()
+    def run(): Seq[String] = {
+      val df = SessionArtifacts.plan(spark, sfDir, "spec:reread") {
+        spark.range(0, 1000, 1, 4).select(probe(col("id")).as("m"))
+          .groupBy(col("m")).agg(count(lit(1)).as("n"))
+      }
+      df.collect().map(_.toString).toSeq.sorted
+    }
+    val first = run()
+    val firstCalls = calls.value
+    assert(firstCalls == 1000L)
+    val second = run()
+    assert(second == first)
+    assert(calls.value - firstCalls == firstCalls,
+      "the second call must run the source UDF as often as the first")
   }
 
   test("cached SqlSurface plan executes from parquet on every action (no stored rows)") {
     val fn = SparkEntry.queries("q16_scalar_funcs")
     val a = fn(spark, sfDir)
     val b = fn(spark, sfDir)
-    assert(a eq b, "second invocation should hit the plan cache")
+    assert(a.queryExecution.logical eq b.queryExecution.logical,
+      "second invocation should hit the plan cache")
     // the cached object is a PLAN over the file sources: no LocalRelation
     // of materialized rows, no InMemoryRelation — an action scans parquet
     val optimized = a.queryExecution.optimizedPlan
@@ -57,7 +73,7 @@ class PlanCacheSpec extends AnyFunSuite {
       val fn = SparkEntry.queries(name)
       val cached = fn(spark, sfDir) // second+ call in the suite = a hit
       val fresh = fn(spark, sfDir)
-      assert(cached eq fresh)
+      assert(cached.queryExecution.logical eq fresh.queryExecution.logical)
       assert(cached.collect().map(_.toString).toSeq ==
         fresh.collect().map(_.toString).toSeq)
     }

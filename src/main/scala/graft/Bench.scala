@@ -1,67 +1,24 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR and
   * prints one JSON line. A warmup action first absorbs JVM/classloading/
   * parquet-footer costs so per-query numbers reflect steady-state
   * throughput. */
 object Bench {
+  /** JMH-style hygiene: collect BEFORE each timed window, outside it. A
+    * long session otherwise accumulates dead plan/shuffle/broadcast state
+    * that the ContextCleaner only drains after a driver GC (a 48g heap
+    * rarely collects organically), and queries late in the pass absorb
+    * the accumulated debt — measured up to 17x inflation on a 103-query
+    * sf1 session vs the same query in a fresh JVM. */
+  def settle(): Unit = {
+    System.gc()
+    Thread.sleep(100) // let the ContextCleaner drain OUTSIDE the window
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to the host's full width: the driver may not set
-    // SPARK_GRAFT_CPUS, and a silent local[4] would publish numbers a
-    // third slower than the machine can do
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    // optional conf overrides for tuning experiments:
-    // SPARK_GRAFT_EXTRA_CONF="k=v;k=v" (applied last, wins)
-    val extraConf = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
-      .flatMap(_.split(";")).map(_.trim).filter(_.nonEmpty)
-      .map { kv => val Array(k, v) = kv.split("=", 2); (k, v) }
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // this suite's exchanges are mostly far below one task's worth of
-      // data; with parallelismFirst (the default) AQE keeps ~cpus tasks
-      // per kB-sized shuffle purely for parallelism, and the per-task
-      // scheduling overhead dominates sub-second queries. Size-first
-      // coalescing collapses those to one task while leaving real
-      // (≥ advisory size) exchanges at full width.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      // with size-first coalescing, the 64 MB default advisory size
-      // collapses EVERY local exchange to one task — sub-second queries
-      // want that, but the handful of queries with real MB-scale shuffles
-      // (tx10/dd2/dm2) then serialize ~1 s of compute on one core. 4 MB
-      // keeps those exchanges a few tasks wide while kB exchanges still
-      // collapse to one (A/B'd: suite 23.9 s -> 21.3 s). A real cluster
-      // at real scale keeps the 64 MB default — this is the local-mode
-      // sweet spot, sized to the sf0.1 fixture.
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
-      // the built-in whole-stage-codegen compile cache holds 100 generated
-      // classes; this suite's ~104 multi-stage plans generate several
-      // hundred codegen units per pass, so at the default size every pass
-      // re-runs Janino compilation for every stage (~40% of the measured
-      // suite total; A/B'd: an 8-query subset dropped 7.46 s -> 4.67 s).
-      // Any long-lived server session running a query workload this wide
-      // wants the same setting, so it belongs in the harness conf, not a
-      // benchmark trick.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      // single-JVM local mode: shuffle "transfer" is memory/disk with no
-      // network, so lz4 encode/decode on every shuffle/broadcast block is
-      // pure overhead — A/B'd -10% on the shuffle-bound subset, neutral
-      // on the MB-exchange queries. A real cluster keeps compression
-      // (network-bound); this is a local-mode setting like the 4 MB
-      // advisory size.
-      .config("spark.shuffle.compress", "false")
-      .config("spark.shuffle.spill.compress", "false")
-      .config("spark.broadcast.compress", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val spark = extraConf.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     // the per-fetch wire diagnostics (row counts + min/max stats) are a
     // Verify-time tool; inside a timed window they add a whole extra
     // aggregation job to every federation query
@@ -104,14 +61,7 @@ object Bench {
     }
     def timedPass(): Seq[(String, Double)] = {
       ordered.map { case (name, fn) =>
-        // JMH-style hygiene: collect BEFORE each timed window, outside it.
-        // A long session otherwise accumulates dead plan/shuffle/broadcast
-        // state that the ContextCleaner only drains after a driver GC (a
-        // 48g heap rarely collects organically), and queries late in the
-        // pass absorb the accumulated debt — measured up to 17x inflation
-        // on a 103-query sf1 session vs the same query in a fresh JVM.
-        System.gc()
-        Thread.sleep(100) // let the ContextCleaner drain OUTSIDE the window
+        settle()
         val t0 = System.nanoTime()
         try { fn(spark, sfDir).count() } catch {
           case e: Throwable =>

@@ -141,13 +141,6 @@ object Dedup {
       .distinct()
   }
 
-  /** Exact Jaccard over exploded (id, shingle) rows for the given candidate
-    * pairs, filtered at `threshold`. Adapter over [[jaccardVerifySets]]. */
-  def jaccardVerify(sh: DataFrame, cand: DataFrame, threshold: Double): DataFrame =
-    jaccardVerifySets(
-      sh.groupBy(col("__id")).agg(collect_set(col("shingle")).as("__sh")),
-      cand, threshold)
-
   /** Exact Jaccard for candidate pairs over per-doc shingle-SET arrays
     * (`__id`, `__sh`): two id-equality joins bring both sets onto the pair
     * row, then intersection/union sizes are row-local array ops. Each
@@ -425,8 +418,9 @@ object Dedup {
     * index — the APPEND-FILES generation merge: band rows are append-only,
     * so `bandIndexDeltaFor(stored, batch, ...).write.mode("append")` INTO
     * the stored index's table IS the whole merge, with IO proportional to
-    * the BATCH (ProfileMerge measures the gap; [[appendToBandIndex]]'s
-    * union form rewrites the corpus and exists for one-shot compaction or
+    * the BATCH (SCALE.md round-14 "Generation merge" measures the
+    * gap; [[appendToBandIndex]]'s union form rewrites the corpus and
+    * exists for one-shot compaction or
     * in-memory merged reads). The validation is the point of going
     * through this method instead of calling [[bandIndex]] directly: an
     * unvalidated append under a scheme mismatch would poison the stored
@@ -463,7 +457,7 @@ object Dedup {
     * in-memory cache batch stats) only fires when ids are range-clustered
     * per file/batch — a hash-scattered layout makes every id filter scan
     * the whole store, which costs MORE than re-shingling the few
-    * candidate docs (measured at sf10: ProfileDd11Store). The range
+    * candidate docs (measured at sf10: SCALE.md round-14 notes). The range
     * shuffle is paid once per corpus build; every ingest probes. Append
     * batches keep their own per-file ranges (typically disjoint from the
     * corpus's), which prune the same way. */

@@ -30,9 +30,9 @@ object IndexMaintenance {
   final case class IndexHealth(dataFiles: Long, bytes: Long)
 
   /** Default file-count trigger, set AT the measured knee
-    * (ProfileCompaction, sf1 band index, local SSD): a scan-bound probe
-    * is FLAT to ~512 files (128→0.74 s, 512→0.80 s) and degrades
-    * linearly past it (2,048→1.76 s, 8,192→4.30 s) — per-file open and
+    * (SCALE.md round-15 "Compaction policy measured", sf1 band
+    * index, local SSD): a scan-bound probe is FLAT to ~512 files
+    * (128→0.74 s, 512→0.80 s) and degrades linearly past it (2,048→1.76 s, 8,192→4.30 s) — per-file open and
     * footer cost, which an object store only makes worse (each open is
     * a round-trip GET). Each delta append leaves ~write-parallelism
     * files, so 512 ≈ one compaction every ~16 ingests at 32-way — rare

@@ -2191,7 +2191,8 @@ object PipelineQueries {
     // w=1024. ONE full-corpus pass: the per-token count groupBy (map-side
     // partial counts), shared by the exact top-20 side and the sketch
     // (AQE reuses the canonically-equal token exchange across both CTE
-    // inlinings — verified on the FINAL adaptive plan via PlanProbe;
+    // inlinings — verified on the FINAL adaptive plan, SCALE.md
+    // round-10 "ap2 audit";
     // the initial plan misleadingly prints two scans) —
     // the d-way explode and the 4*1024-cell counter aggregation run over
     // the vocab-sized count frame, not the token stream (sums commute, so
@@ -2855,11 +2856,6 @@ object PipelineQueries {
     2 -> Seq("window", "sort", "query"),
     3 -> Seq("spark", "stream", "fast"))
 
-  /** Probe-only accessor for the dev profiling tools (tools/ProfileRt2);
-    * product code keeps using the private val directly. */
-  private[graft] def bm25QueryDefsForProbe: Seq[(Int, Seq[String])] =
-    bm25QueryDefs
-
   /** rt4's parameters — ONE definition consumed by both the Spark entry
     * and the DuckDB oracle builder, so they cannot desynchronize. */
   private val rt4FbK = 10
@@ -2889,7 +2885,7 @@ object PipelineQueries {
     // shingled/hashed at ingest. Verification deliberately RE-READS the
     // candidate docs' text rather than serving the shingle-set sidecar:
     // the stored-set path was built, spec-pinned equal, and A/B'd at sf10
-    // (ProfileDd11Store) — it LOSES here (5.2 vs 3.6 s) because candidate
+    // (SCALE.md round-14 notes) — it LOSES here (5.2 vs 3.6 s) because candidate
     // ids spread uniformly across the id space (every row group holds
     // some, so no layout prunes) and the set arrays out-byte the text
     // they derive from. Recorded in SCALE.md; the sidecar remains the

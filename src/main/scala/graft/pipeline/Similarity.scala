@@ -459,9 +459,10 @@ object Similarity {
   /** Centroid count above which [[semanticDedupLearned]] /
     * [[assignClusters]] / [[sphericalKMeans]] switch from the
     * constant-matrix VectorScores projection to the broadcast-join path
-    * ([[assignClustersJoin]]). Measured at sf1 (ProfileAssignK, SCALE.md
-    * r12): the projection stays correct AND faster through k = 16384 —
-    * no Janino blowup at any k (the matrix is a reference object, not
+    * ([[assignClustersJoin]]). Measured at sf1 (SCALE.md, round 12,
+    * "Large-k centroid assignment A/B"): the projection stays correct
+    * AND faster through k = 16384 — no Janino blowup at any k (the
+    * matrix is a reference object, not
     * literal nodes) and no shuffle — so the boundary is NOT wall time at
     * moderate k; it is closure mass: the k×dim matrix serializes into
     * every task binary of every stage (1.1 MiB at k = 4096, linear in k),
@@ -1248,7 +1249,8 @@ object Similarity {
     // native VectorDotI64 == the aggregate(zip_with(..)) lambda spelling
     // (exact long arithmetic either way) but codegen'd — the interpreted
     // form ran ~2·dim closure calls per row and was emb1's whole cost
-    // (JobProfile r12: one 1.6 s task-time stage on a 20 k-row corpus)
+    // (SCALE.md round-12 weak-tail profiles: one 1.6 s task-time stage on
+    // a 20 k-row corpus)
     import graft.functions.VectorFunctions.{vec_dot_i64 => doti}
     v.join(broadcast(cent), "label")
       .select(col("vec_id"), col("label"),

@@ -1,7 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
+
+import graft.GraftSession
 
 /** Derive an sf1-scale dataset from the driver's sf0.1 tables (the driver
   * provides no generator past sf0.1 and /root/testdata is read-only, so the
@@ -43,14 +45,8 @@ object MakeScale {
     val flipOffset = if (args.length > 3) args(3).toInt else 0
     require(copies - 1 + flipOffset < 64,
       s"flip dims exceed the 64-dim embeddings: copies=$copies flipOffset=$flipOffset")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     def read(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
     def write(df: DataFrame, t: String): Unit = {

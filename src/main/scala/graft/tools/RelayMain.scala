@@ -2,8 +2,7 @@ package graft.tools
 
 import java.nio.file.Paths
 
-import org.apache.spark.sql.SparkSession
-
+import graft.GraftSession
 import graft.catalog.ConfigLoader
 import graft.mesh.{MeshRegistry, MeshSession, QueryService}
 import graft.transport.RelayServer
@@ -42,15 +41,8 @@ object RelayMain {
     val results = opts.getOrElse("results",
       java.nio.file.Files.createTempDirectory("graft_relay_results").toString)
 
-    val spark = SparkSession.builder()
-      .master(opts.getOrElse("master", "local[*]"))
-      .appName(s"graft-relay-$site")
-      // long-lived server session: the default 100-entry codegen compile
-      // cache thrashes under a wide query workload (see Bench)
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(
+      opts.getOrElse("master", GraftSession.defaultMaster), s"graft-relay-$site")
 
     // quick-start physical views: --register /data/x.parquet:raw_x
     opts.getOrElse("registers", "").split(" ").filter(_.nonEmpty).foreach { r =>

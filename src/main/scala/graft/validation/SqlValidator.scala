@@ -1050,30 +1050,69 @@ object SqlValidator {
     entities.head
   }
 
-  /** Quote-aware top-level split on ';' (the reference parses the full text
-    * and counts statements; Spark's parser is single-statement, so we count
-    * before parsing). Literal bounds come from [[literalEnd]] — the SAME
-    * backslash-escape-aware scanner every bridge uses, so statement
-    * splitting and bridge rewriting can never disagree about where literal
-    * data lives (a quote-toggling scanner mis-split `'a\';b'`). */
+  /** Top-level split on ';' (the reference parses the full text and
+    * counts statements; Spark's parser is single-statement, so we count
+    * before parsing). A ';' inside a string literal, a `-- …` or
+    * `/* … */` comment or a backquoted identifier does not split, and a
+    * piece holding only whitespace and comments is no statement. Literal
+    * bounds come from [[literalEnd]] — the SAME backslash-escape-aware
+    * scanner every bridge uses, so statement splitting and bridge
+    * rewriting can never disagree about where literal data lives (a
+    * quote-toggling scanner mis-split `'a\';b'`). */
   private[validation] def splitStatements(sql: String): Seq[String] = {
     val out = mutable.ArrayBuffer.empty[String]
-    val cur = new StringBuilder
+    var start = 0
+    var code = false // the current piece holds more than comments
     var i = 0
     while (i < sql.length) {
       val c = sql.charAt(i)
-      if (c == '\'' || c == '"') {
-        val end = literalEnd(sql, i)
-        cur.append(sql.substring(i, end))
-        i = end
-      } else if (c == ';') {
-        if (cur.toString.trim.nonEmpty) out += cur.toString
-        cur.clear()
+      if (sql.startsWith("--", i)) {
+        val nl = sql.indexOf('\n', i)
+        i = if (nl < 0) sql.length else nl
+      } else if (sql.startsWith("/*", i)) i = blockCommentEnd(sql, i)
+      else if (c == ';') {
+        if (code) out += sql.substring(start, i)
+        start = i + 1
+        code = false
         i += 1
-      } else { cur += c; i += 1 }
+      } else {
+        if (!c.isWhitespace) code = true
+        i =
+          if (c == '\'' || c == '"') literalEnd(sql, i)
+          else if (c == '`') identifierEnd(sql, i)
+          else i + 1
+      }
     }
-    if (cur.toString.trim.nonEmpty) out += cur.toString
+    if (code) out += sql.substring(start)
     out.toSeq
+  }
+
+  /** Index just past the bracketed comment opening at `start`; Spark's
+    * lexer nests them. Returns s.length when unterminated. */
+  private def blockCommentEnd(s: String, start: Int): Int = {
+    var depth = 0
+    var i = start
+    while (i < s.length) {
+      if (s.startsWith("/*", i)) { depth += 1; i += 2 }
+      else if (s.startsWith("*/", i)) {
+        depth -= 1
+        i += 2
+        if (depth == 0) return i
+      } else i += 1
+    }
+    s.length
+  }
+
+  /** Index just past the backquoted identifier opening at `start`; a
+    * doubled backquote inside it is an escaped one. */
+  private def identifierEnd(s: String, start: Int): Int = {
+    var i = start + 1
+    while (i < s.length) {
+      if (s.charAt(i) != '`') i += 1
+      else if (s.startsWith("``", i)) i += 2
+      else return i + 1
+    }
+    s.length
   }
 
   private def isReadOnly(plan: LogicalPlan): Boolean = plan match {

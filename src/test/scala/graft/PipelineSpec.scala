@@ -1084,8 +1084,8 @@ class PipelineSpec extends AnyFunSuite {
     // backfill-sized-call guard. Results must be identical either side.
     // (The verify subtree is eagerly checkpointed, so the final frame's
     // analyzed plan can no longer carry its hints — the strategy tiers
-    // are pinned by result equality here and by the ProfileIngestDecision
-    // job accounting.)
+    // are pinned by result equality here and by the job counts of
+    // "stored-shingles ingest decision" below.)
     val hinted = graft.pipeline.Dedup
       .incrementalNearDupPairs(batch, corpus, index, "doc_id", "text")
     val gated = graft.pipeline.Dedup
@@ -1124,6 +1124,70 @@ class PipelineSpec extends AnyFunSuite {
     assert(hints(mGated) == 0,
       "a backfill-sized relabel must not carry an explicit broadcast hint")
     assert(asMap(mHinted) == asMap(mGated) && asMap(mHinted).nonEmpty)
+  }
+
+  /** Spark jobs `f` submits from this thread (and from the AQE threads
+    * that inherit its local properties). A tagged sentinel job marks the
+    * end: the listener bus delivers in order, so once its start arrives
+    * every earlier one has. */
+  private def jobsOf[A](f: => A): (A, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val key = "graft.spec.jobs"
+    val tags = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(p => Option(p.getProperty(key)))
+          .foreach(tags.add(_): Unit)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, "counted")
+      val a = try f finally sc.setLocalProperty(key, "sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.currentTimeMillis() + 30000
+      while (!tags.contains("sentinel") && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      assert(tags.contains("sentinel"), "listener bus did not drain")
+      (a, tags.toArray.count(_ == "counted"))
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("stored-shingles ingest decision: job counts of the under-bound and past-bound tiers") {
+    // The under-bound ingest proves itself under the In-list bound with a
+    // block-scan count of the pair list and materializes no ids; only an
+    // ambiguous (past-bound) ingest pays one id-set checkpoint + count.
+    // Counted on the second run of each, after a warm first run.
+    import org.apache.spark.storage.StorageLevel
+    import graft.pipeline.Dedup
+    val docs = graft.sources.LocalLayout.parquet(spark, s"$sfDir/documents.parquet")
+    val corpus = docs.where(col("doc_id") % 10 =!= 0)
+    val batch = docs.where(col("doc_id") % 10 === 0)
+    val index = Dedup.bandIndex(corpus, "doc_id", "text")
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val store = Dedup.shingleSetStore(corpus, "doc_id", "text")
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      index.count()
+      store.count()
+      def ingest(inListMaxIds: Long): (Long, Int) = {
+        Dedup.incrementalNearDupPairs(batch, corpus, index, "doc_id", "text",
+          storedShingles = Some(store), inListMaxIds = inListMaxIds).count()
+        jobsOf(Dedup.incrementalNearDupPairs(batch, corpus, index, "doc_id", "text",
+          storedShingles = Some(store), inListMaxIds = inListMaxIds).count())
+      }
+      val (underPairs, underJobs) = ingest(100000L)
+      val (pastPairs, pastJobs) = ingest(1L)
+      assert(underPairs == 12 && pastPairs == 12)
+      assert(underJobs == 16, "under-bound ingest job count")
+      assert(pastJobs == 24, "past-bound ingest job count")
+    } finally {
+      index.unpersist()
+      store.unpersist()
+    }
   }
 
   test("band-index generation merge: sequential appends == one build") {

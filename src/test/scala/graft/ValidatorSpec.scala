@@ -28,6 +28,19 @@ class ValidatorSpec extends AnyFunSuite {
       "invalid query: Each query must contain exactly one statement. Found: 2")
   }
 
+  test("statement count: a ';' inside a block comment ends no statement") {
+    assert(SqlValidator.validate("SELECT orderkey FROM lineitem /* ; */", spark) == "lineitem")
+  }
+
+  test("statement count: a ';' inside a line comment ends no statement") {
+    assert(SqlValidator.validate("SELECT orderkey FROM lineitem -- a; b", spark) == "lineitem")
+  }
+
+  test("statement count: a quote inside a backquoted identifier opens no string literal") {
+    assert(errOf("SELECT `it's` FROM lineitem WHERE orderkey > 1; SELECT 2") ==
+      "invalid query: Each query must contain exactly one statement. Found: 2")
+  }
+
   test("golden: >1,000,000 chars rejected with exact reference error string") {
     val stmt = "select * from table;"
     val sql = stmt * 50001

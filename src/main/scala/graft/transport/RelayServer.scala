@@ -8,7 +8,7 @@ import java.nio.file.{Files, Path, Paths}
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.graft.ResultRows
+import org.apache.spark.sql.graft.{ColumnBridge, ResultRows}
 
 import graft.catalog.ArrowLikeType
 import graft.mesh.{EntityResolver, MeshSession, QueryService}
@@ -24,9 +24,10 @@ import graft.validation.SqlValidator
   * dependencies; zero-egress sandbox — loopback TCP only in tests), with
   * parquet as the bulk result encoding (the reference's own async spill
   * format, `core/src/execute/result_manager.rs:58-92`) and, negotiated on
-  * the sync path, the Arrow IPC stream a Flight `do_get` body carries
-  * ([[ArrowCodec]] — the payload framing is the reference's own; only the
-  * gRPC carrier + mTLS remain unreproducible without flight-core jars):
+  * the sync path, the Arrow IPC stream a Flight `do_get` body carries,
+  * written by Spark's own Arrow writer (`ColumnBridge.toArrowStream`; the
+  * payload framing is the reference's own; only the gRPC carrier + mTLS
+  * remain unreproducible without flight-core jars):
   *
   *   - `GET  /catalog`                      site name + entity schemas
   *     (Arrow-style dtype strings) — what a peer needs to build its stub
@@ -40,11 +41,10 @@ import graft.validation.SqlValidator
   *   - `GET  /query/{id}/ndjson`            NDJSON with `_relay_metadata_`
   *   - `POST /query/sync`                   {sql, user?, with_provenance?}
   *     → the Arrow IPC stream when the caller accepts it, else parquet
-  *     bytes; a caller accepting both (a peer relay's wire hop) gets
-  *     parquet for a result past `WireArrowMaxBytes` or the Arrow row cap,
-  *     or with a type the codec does not carry (the Flight do_get path;
-  *     relay identity and the visited-relay cycle guard cross in
-  *     `X-Graft-Relay`/`X-Graft-Visited`)
+  *     bytes; past `WireArrowMaxBytes` a caller accepting both (a peer
+  *     relay's wire hop) gets parquet and an Arrow-only caller 413 (the
+  *     Flight do_get path; relay identity and the visited-relay cycle
+  *     guard cross in `X-Graft-Relay`/`X-Graft-Visited`)
   *   - `PUT  /ingest/{id}/{branch}`         parquet bytes pushed by an
   *     executor relay (do_put)
   *
@@ -325,15 +325,13 @@ final class RelayServer(
     // from siphoning a full-corpus result through this one process —
     // past the cap, fetch the parquet spill (`/query/{id}/result`)
     // instead, which streams files without row materialization.
-    val cap = sys.env.get("GRAFT_NDJSON_MAX_ROWS").map(_.toLong)
-      .getOrElse(1000000L)
+    val cap = RelayServer.NdjsonMaxRows
     // parquet count() answers from footer metadata — no row scan
     val n = service.results(id, allowPartial = false).count()
     if (n > cap)
       return respond(ex, 413, "application/json", errJson(
         s"result has $n rows, over the NDJSON export cap of $cap; " +
-          "fetch /query/" + id + "/result (parquet) instead or raise " +
-          "GRAFT_NDJSON_MAX_ROWS"))
+          "fetch /query/" + id + "/result (parquet) instead"))
     val it = service.resultsNdjson(id).toLocalIterator()
     ex.getResponseHeaders.set("Content-Type", "application/x-ndjson")
     ex.sendResponseHeaders(200, 0) // chunked: stream, don't buffer the result
@@ -350,11 +348,13 @@ final class RelayServer(
     * with the caller relay's identity and visited set, then answer in
     * the format the caller accepts. Negotiating `Accept:
     * application/vnd.apache.arrow.stream` (or sending `format: "arrow"`)
-    * asks for the Arrow IPC stream a Flight do_get body actually is (see
-    * [[ArrowCodec]]); a caller that also lists parquet (a peer relay's
-    * wire hop) is answered by [[negotiate]], one that does not gets the
-    * 406 or 413 when the result cannot go as Arrow; a caller that asks
-    * for no Arrow gets parquet. */
+    * asks for the Arrow IPC stream a Flight do_get body actually is; a
+    * caller that also lists parquet (a peer relay's wire hop) is answered
+    * by [[negotiate]]; one that does not gets 413 for a result past
+    * [[RelayServer.WireArrowMaxBytes]], decided from one execution before
+    * any response byte is sent (the stream is buffered: this is the
+    * small-result path); a caller that asks for no Arrow gets parquet.
+    * Every column type a result carries goes as Arrow. */
   private def syncQuery(ex: HttpExchange, auth: Auth): Unit = {
     val body = mapper.readTree(ex.getRequestBody)
     val sql = reqField(body, "sql")
@@ -367,68 +367,26 @@ final class RelayServer(
       Option(body.get("format")).exists(_.asText("") == "arrow")
     if (!wantsArrow) respondParquet(ex, df)
     else if (accept.contains("parquet")) negotiate(ex, df)
-    else encodeArrow(df) match {
-      case Right(bytes) => respond(ex, 200, ArrowCodec.ContentType, bytes)
-      case Left((code, msg)) => respond(ex, code, "application/json", errJson(msg))
+    else ResultRows.arrowWithin(df, RelayServer.WireArrowMaxBytes) match {
+      case Some(bytes) => respond(ex, 200, ArrowCodec.ContentType, bytes)
+      case None => respond(ex, 413, "application/json", errJson(
+        s"result exceeds the Arrow bound of ${RelayServer.WireArrowMaxBytes} " +
+          "bytes; negotiate parquet instead"))
     }
-  }
-
-  /** The Arrow row cap: past it a result is the splittable parquet's to
-    * carry. */
-  private def arrowRowCap: Long =
-    sys.props.get("graft.arrow.maxRows")
-      .orElse(sys.env.get("GRAFT_ARROW_MAX_ROWS")).getOrElse("1000000").toLong
-
-  /** Serialize a result as one Arrow IPC stream, or say why it cannot
-    * go as one: the HTTP status and message an Arrow-only caller gets.
-    * Driver-side like the NDJSON export, and capped the same way.
-    *
-    * Decided BEFORE any response byte is committed: an unsupported
-    * column type is 406 (the codec's type set is checked against the
-    * schema up front, not discovered mid-stream after a 200), and the
-    * cap is 413 — the encoded stream is buffered (this is the
-    * small-result path; bulk results take parquet) and one
-    * toLocalIterator execution both counts and encodes the rows. */
-  private def encodeArrow(df: DataFrame): Either[(Int, String), Array[Byte]] = {
-    import scala.jdk.CollectionConverters._
-    val cap = arrowRowCap
-    val bad = df.schema.fields.filterNot(f => ArrowCodec.supports(f.dataType))
-    if (bad.nonEmpty)
-      return Left((406, "arrow transport does not carry " +
-        bad.map(f => s"${f.name}: ${f.dataType.simpleString}").mkString(", ") +
-        "; fetch the parquet result instead"))
-    val it = df.toLocalIterator().asScala
-    var n = 0L
-    val limited = new Iterator[org.apache.spark.sql.Row] {
-      def hasNext: Boolean = n < cap && it.hasNext
-      def next(): org.apache.spark.sql.Row = { n += 1; it.next() }
-    }
-    val buf = new java.io.ByteArrayOutputStream()
-    ArrowCodec.write(df.schema, limited, buf)
-    if (it.hasNext)
-      Left((413, s"result exceeds the arrow cap of $cap rows; " +
-        "negotiate parquet instead or raise GRAFT_ARROW_MAX_ROWS"))
-    else Right(buf.toByteArray)
   }
 
   /** Answer a caller that accepts both formats from ONE execution of the
-    * query: Arrow when the result fits in [[RelayServer.WireArrowMaxBytes]]
-    * and the row cap, else parquet. The tasks hand back the rows of a
-    * result that fits and write a bulk one to parquet themselves (see
+    * query: Arrow when the result fits in [[RelayServer.WireArrowMaxBytes]],
+    * else parquet. The tasks hand back the rows of a result that fits and
+    * write a bulk one to parquet themselves (see
     * `ResultRows.rowsOrParquet`), so the query never runs twice and at
-    * most the bound's worth of rows reaches this process's driver. A
-    * schema the codec does not carry goes straight to the parquet write. */
+    * most the bound's worth of rows reaches this process's driver. */
   private def negotiate(ex: HttpExchange, df: DataFrame): Unit = {
-    if (!df.schema.fields.forall(f => ArrowCodec.supports(f.dataType)))
-      return respondParquet(ex, df)
     // created by the parquet writers only if the answer is parquet
     val tmp = RelayServer.outDir()
-    try ResultRows.rowsOrParquet(
-        df, RelayServer.WireArrowMaxBytes, arrowRowCap, tmp) match {
-      case Left(rows) =>
-        val buf = new java.io.ByteArrayOutputStream()
-        ArrowCodec.write(df.schema, rows.iterator.map(ResultRows.toExternal(df.schema)), buf)
-        respond(ex, 200, ArrowCodec.ContentType, buf.toByteArray)
+    try ResultRows.rowsOrParquet(df, RelayServer.WireArrowMaxBytes, tmp) match {
+      case Left(rows) => respond(ex, 200, ArrowCodec.ContentType, ColumnBridge.toArrowStream(
+        df.schema, rows.iterator, df.sparkSession.conf.get("spark.sql.session.timeZone")))
       case Right(file) => sendParquet(ex, file)
     } finally RelayServer.deleteRecursively(tmp)
   }
@@ -568,18 +526,28 @@ object RelayServer {
     * servers without cert auth. */
   private final case class Auth(user: Option[String])
 
-  /** The largest result, in UnsafeRow bytes, a caller accepting both
-    * formats gets as Arrow; past it the tasks write parquet. A fetched
-    * Arrow body is held in the caller's heap, a parquet one is a file
-    * scanned lazily, so the bound sits below the measured crossover.
-    * Measured on a 4-core host: sync fetches of a 15-column lineitem
-    * entity (144 UnsafeRow bytes a row) plus an aggregate over the
+  /** The largest result, in UnsafeRow bytes, sent as Arrow: past it a
+    * caller accepting both formats gets parquet, written by the tasks,
+    * and an Arrow-only caller 413. A fetched Arrow body is held in the
+    * caller's heap, a parquet one is a file scanned lazily, so the bound
+    * sits below the measured crossover. Measured on a 4-core host with
+    * Spark's Arrow writer: sync fetches plus an aggregate over the
     * fetched frame, the two encodings alternating in one process, 9 pairs
-    * a size, medians: Arrow 305 vs parquet 446 ms at 10k rows, 377 vs
-    * 438 ms at 56k, even at 80k (11.5 MB, 430 ms each), slower from 120k
-    * (428 vs 398 ms; 806 vs 518 ms at 240k). 8 MB is ~58k such rows; a
-    * mesh result of the relay-sync benchmark is 10-20k rows. */
+    * a size, medians Arrow vs parquet. A 15-column lineitem entity (144
+    * UnsafeRow bytes a row): 392 vs 485 ms at 8 MB (58k rows), 440 vs
+    * 482 at 16 MB, 521 vs 519 at 24 MB, 709 vs 568 at 32 MB. Documents
+    * (365 bytes a row, ~300-character texts): 228 vs 284 ms at 8 MB (23k
+    * rows), 322 vs 321 at 16 MB, 420 vs 384 at 24 MB. The crossover is
+    * ~16 MB for long strings and ~24 MB for lineitem rows (~11.5 MB with
+    * the earlier boxed-row encoder). Peak RSS of a caller making only
+    * 8 MB fetches (4 GB heap): 1.70 GB Arrow vs 1.62 GB parquet for
+    * lineitem, 1.73 vs 1.21 GB for documents. A mesh result of the
+    * relay-sync benchmark is 10-20k rows. */
   private[graft] val WireArrowMaxBytes: Long = 8L << 20
+
+  /** The most rows `/query/{id}/ndjson` renders through the driver; past
+    * it a caller fetches the parquet result. */
+  private val NdjsonMaxRows: Long = 1000000L
 
   /** A fresh path for one result's parquet output; the writers create it. */
   private[transport] def outDir(): Path = Paths.get(System.getProperty("java.io.tmpdir"),

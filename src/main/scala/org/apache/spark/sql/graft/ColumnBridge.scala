@@ -47,6 +47,47 @@ object ColumnBridge {
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.queryExecution.analyzed
 
+  /** Encode `rows` of `schema` as one Arrow IPC stream with Spark's own
+    * Arrow writer and type mapping, the ones [[fromArrowStream]] reads
+    * back: the schema, record batches of at most 4096 rows, then
+    * end-of-stream. No rows make a stream of the schema alone. Every
+    * field is written nullable, as a parquet answer reads back.
+    * Timestamps are instants; `timeZoneId` only labels them. Each row is
+    * copied into the batch as it is read, so `rows` may reuse one row. */
+  def toArrowStream(
+      schema: org.apache.spark.sql.types.StructType,
+      rows: Iterator[org.apache.spark.sql.catalyst.InternalRow],
+      timeZoneId: String): Array[Byte] = {
+    import org.apache.arrow.vector.VectorSchemaRoot
+    import org.apache.arrow.vector.ipc.ArrowStreamWriter
+    import org.apache.spark.sql.execution.arrow.ArrowWriter
+    import org.apache.spark.sql.util.ArrowUtils
+    val arrowSchema = ArrowUtils.toArrowSchema(schema.asNullable, timeZoneId,
+      errorOnDuplicatedFieldNames = true, largeVarTypes = false)
+    val out = new java.io.ByteArrayOutputStream()
+    val allocator = ArrowUtils.rootAllocator.newChildAllocator("toArrowStream", 0, Long.MaxValue)
+    try {
+      val root = VectorSchemaRoot.create(arrowSchema, allocator)
+      try {
+        val writer = ArrowWriter.create(root)
+        val stream = new ArrowStreamWriter(root, null, out)
+        stream.start()
+        while (rows.hasNext) {
+          var n = 0
+          while (n < 4096 && rows.hasNext) {
+            writer.write(rows.next())
+            n += 1
+          }
+          writer.finish()
+          stream.writeBatch()
+          writer.reset()
+        }
+        stream.end()
+      } finally root.close()
+    } finally allocator.close()
+    out.toByteArray
+  }
+
   /** Decode one Arrow IPC stream (`ArrowConverters` is private[sql])
     * into compact UnsafeRow copies and a DataFrame over them; returns
     * the frame and its row count. The Arrow buffers are released before

@@ -13,9 +13,8 @@ import org.apache.parquet.column.ParquetProperties
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter, ParquetWriter}
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.classic.SparkSession
 import org.apache.spark.sql.execution.SQLExecution
@@ -24,25 +23,22 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SerializableConfiguration
 
-/** A query result read out for the relay's wire: its rows when they are
-  * few, else one parquet file (the physical-plan execution, execution
-  * tracking and task-side writer it needs are private[sql]/[spark]). */
+/** A query result read out for the relay's wire: its rows, or an Arrow
+  * stream of them, when they are few, else one parquet file (the
+  * physical-plan execution, execution tracking and task-side writer it
+  * needs are private[sql]/[spark]). */
 object ResultRows {
 
-  /** The boxed Row of an internal row of `schema`, as `collect` builds it. */
-  def toExternal(schema: StructType): InternalRow => Row =
-    ExpressionEncoder(schema).resolveAndBind().createDeserializer()
-
   /** Execute `df` once, as one job, and return its rows if they fit in
-    * `maxBytes` (UnsafeRow bytes) and `maxRows`, else one parquet file of
-    * them written under `dir` (created only then). Each task returns its
+    * `maxBytes` (UnsafeRow bytes), else one parquet file of them written
+    * under `dir` (created only then). Each task returns its
     * partition's rows while they fit in the partition's share of
     * `maxBytes`, and writes them to a parquet file of its own once they do
     * not, so a bulk result never reaches the driver and the driver holds
-    * at most `maxBytes` of rows. Past the bounds, the rows that did come
+    * at most `maxBytes` of rows. Past the bound, the rows that did come
     * back are written next to the tasks' files, and the files are merged
     * in partition order by copying their row groups. */
-  def rowsOrParquet(df: DataFrame, maxBytes: Long, maxRows: Long,
+  def rowsOrParquet(df: DataFrame, maxBytes: Long,
       dir: Path): Either[Seq[UnsafeRow], Path] = {
     val schema = df.schema
     val qe = df.queryExecution
@@ -55,8 +51,7 @@ object ResultRows {
         packOrWrite(rows, share, f"$base/part-${ctx.partitionId()}%05d.parquet",
           factory, conf, schema))
     }
-    val returned = parts.collect { case Left((n, _)) => n.toLong }
-    if (returned.length == parts.length && returned.sum <= maxRows)
+    if (parts.forall(_.isLeft))
       Left(parts.toSeq.flatMap {
         case Left((_, packed)) => unpack(packed, schema.length)
         case Right(_) => Nil
@@ -84,7 +79,7 @@ object ResultRows {
     * (an empty result too, as a file of the schema alone). Returns the
     * file and whether the result is empty. */
   def asParquet(df: DataFrame, maxBytes: Long, dir: Path): (Path, Boolean) =
-    rowsOrParquet(df, maxBytes, Long.MaxValue, dir) match {
+    rowsOrParquet(df, maxBytes, dir) match {
       case Right(file) => (file, false)
       case Left(rows) =>
         val file = dir.resolve("rows.parquet")
@@ -92,6 +87,25 @@ object ResultRows {
         writeRows(rows.iterator, file.toString, factory, conf, df.schema)
         (file, rows.isEmpty)
     }
+
+  /** Execute `df` once and return its rows as one Arrow IPC stream, or
+    * None once their UnsafeRow bytes pass `maxBytes`. The rows reach the
+    * driver a partition at a time, as `toLocalIterator` runs them, and
+    * are encoded as they arrive: past the bound the partitions not yet
+    * read never run. */
+  def arrowWithin(df: DataFrame, maxBytes: Long): Option[Array[Byte]] = {
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("toArrowStream")) {
+      var bytes = 0L
+      val within = qe.executedPlan.executeToIterator().takeWhile { r =>
+        bytes += r.asInstanceOf[UnsafeRow].getSizeInBytes
+        bytes <= maxBytes
+      }
+      val stream = ColumnBridge.toArrowStream(df.schema, within,
+        qe.sparkSession.sessionState.conf.sessionLocalTimeZone)
+      if (bytes > maxBytes) None else Some(stream)
+    }
+  }
 
   /** The writer factory and settings a parquet save of `df` uses — the
     * writer's settings only (prepareWrite sets them from the SQL conf):

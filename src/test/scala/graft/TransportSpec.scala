@@ -125,11 +125,6 @@ class TransportSpec extends AnyFunSuite {
   private def decodedInMemory(df: org.apache.spark.sql.DataFrame): Boolean =
     df.inputFiles.isEmpty
 
-  private def withArrowCap[A](rows: Int)(f: => A): A = {
-    sys.props("graft.arrow.maxRows") = rows.toString
-    try f finally sys.props.remove("graft.arrow.maxRows")
-  }
-
   private def syncFetch(url: String, sql: String) =
     RelayClient.syncFetch(spark, url, sql, user = None, viaRelay = "",
       visited = Set.empty, withProvenance = false)
@@ -828,35 +823,54 @@ class TransportSpec extends AnyFunSuite {
       StructField("s", ShortType), StructField("d", DoubleType),
       StructField("f", FloatType), StructField("str", StringType),
       StructField("b", BooleanType), StructField("dt", DateType),
-      StructField("ts", TimestampType), StructField("bin", BinaryType)))
+      StructField("ts", TimestampType), StructField("bin", BinaryType),
+      StructField("dec", DecimalType(12, 2)), StructField("ntz", TimestampNTZType),
+      StructField("arr", ArrayType(LongType)),
+      StructField("st", StructType(Seq(StructField("a", StringType), StructField("n", LongType)))),
+      StructField("m", MapType(StringType, LongType)),
+      StructField("dti", DayTimeIntervalType())))
     val ts = java.sql.Timestamp.valueOf("2024-06-01 12:34:56.123456")
-    val rows = Seq(
-      Row(7L, 3, 2.toShort, 1.5d, 0.25f, "héllo",
-        true, java.sql.Date.valueOf("2024-06-01"), ts, Array[Byte](1, 2, 3)),
-      Row(null, null, null, null, null, null, null, null, null, null))
-    val out = new java.io.ByteArrayOutputStream()
-    graft.transport.ArrowCodec.write(schema, rows.iterator, out, batchSize = 1)
-    // decoded the way a sync fetch decodes: into in-memory rows
-    val (df, n) = org.apache.spark.sql.graft.ColumnBridge.fromArrowStream(
-      spark, out.toByteArray)
-    assert(n == 2)
-    assert(df.schema == schema)
-    val got = df.collect()
-    assert(got.length == 2)
-    // binary needs deep comparison; compare the rest structurally
-    assert(got(0).toSeq.dropRight(1) == rows(0).toSeq.dropRight(1))
-    assert(java.util.Arrays.equals(got(0).getAs[Array[Byte]](9), Array[Byte](1, 2, 3)))
-    assert(got(1).toSeq.forall(_ == null))
-    // the type surface is closed: anything else fails loudly
-    val err = intercept[IllegalArgumentException] {
-      graft.transport.ArrowCodec.write(
-        StructType(Seq(StructField("a", ArrayType(LongType)))),
-        Iterator.empty, new java.io.ByteArrayOutputStream())
+    val full = Row(7L, 3, 2.toShort, 1.5d, 0.25f, "héllo",
+      true, java.sql.Date.valueOf("2024-06-01"), ts, Array[Byte](1, 2, 3),
+      new java.math.BigDecimal("12345.67"),
+      java.time.LocalDateTime.of(2024, 6, 1, 12, 34, 56, 123456000),
+      Seq(1L, null, 3L), Row("a", null), Map("k" -> 1L, "z" -> null),
+      java.time.Duration.ofSeconds(93784, 5000))
+    // more rows than one record batch holds
+    val rows = Seq.fill(2500)(Seq(full, Row.fromSeq(Seq.fill(schema.length)(null)))).flatten
+    def values(r: Row) = r.toSeq.map {
+      case b: Array[Byte] => b.toSeq
+      case v => v
     }
-    assert(err.getMessage.contains("parquet"))
+    // the internal rows of a query over them, and the boxed rows
+    val internal = spark.createDataFrame(rows.asJava, schema)
+      .queryExecution.executedPlan.executeCollect()
+    val viaRows = new java.io.ByteArrayOutputStream()
+    graft.transport.ArrowCodec.write(schema, rows.iterator, viaRows)
+    for (stream <- Seq(
+        org.apache.spark.sql.graft.ColumnBridge.toArrowStream(schema, internal.iterator, "UTC"),
+        viaRows.toByteArray)) {
+      // decoded the way a sync fetch decodes: into in-memory rows
+      val (df, n) = org.apache.spark.sql.graft.ColumnBridge.fromArrowStream(spark, stream)
+      assert(n == rows.size)
+      assert(df.schema == schema)
+      assert(df.collect().toSeq.map(values) == rows.map(values))
+    }
+    // no column type is refused, so an Arrow-only caller never gets 406:
+    // each of Spark's remaining types encodes and decodes with its type
+    val rest = StructType(Seq(
+      StructField("by", ByteType), StructField("nul", NullType),
+      StructField("ym", YearMonthIntervalType()), StructField("ci", CalendarIntervalType),
+      StructField("v", VariantType),
+      StructField("nested", MapType(StringType,
+        ArrayType(StructType(Seq(StructField("x", DecimalType(38, 10)))))))))
+    val (empty, none) = org.apache.spark.sql.graft.ColumnBridge.fromArrowStream(spark,
+      org.apache.spark.sql.graft.ColumnBridge.toArrowStream(rest, Iterator.empty, "UTC"))
+    assert(none == 0)
+    assert(empty.schema == rest)
   }
 
-  test("arrow wire negotiation: do_get body equals the parquet result; cap enforced") {
+  test("arrow wire negotiation: do_get body equals the parquet result, from one execution") {
     withServer(betaMesh(), "beta") { server =>
       val sql = "SELECT doc_id, lang, n_chars FROM documents ORDER BY doc_id"
       val (viaArrow, arrowRuns) = withExecutions(syncFetch(server.url, sql))
@@ -865,50 +879,52 @@ class TransportSpec extends AnyFunSuite {
       val (parquetFields, parquetOnly) = parquetOnlyAnswer(server.url, sql, "doc_id")
       assert(fieldsOf(viaArrow) == parquetFields)
       assert(viaArrow.orderBy("doc_id").collect().toSeq == parquetOnly)
-      // past the row cap the negotiated fetch falls back to parquet from
-      // the same single execution of the query, and a caller accepting
-      // only Arrow is refused with 413
-      withArrowCap(3) {
-        val resp = postSync(server.url, sql, RelayClient.SyncAccept)
-        assert(resp.headers().firstValue("Content-Type").get == ParquetType)
-        val (fallback, fallbackRuns) = withExecutions(syncFetch(server.url, sql))
-        assert(!decodedInMemory(fallback))
-        assert(fallbackRuns.size == 1, fallbackRuns)
-        assert(fieldsOf(fallback) == parquetFields)
-        assert(fallback.orderBy("doc_id").collect().toSeq == parquetOnly)
-        val arrowOnly = postSync(server.url, sql, graft.transport.ArrowCodec.ContentType)
-        assert(arrowOnly.statusCode() == 413)
-      }
+      // a caller accepting only Arrow gets the same answer
+      val (arrowOnly, arrowOnlyRuns) = withExecutions(
+        postSync(server.url, sql, graft.transport.ArrowCodec.ContentType))
+      assert(arrowOnlyRuns.size == 1, arrowOnlyRuns)
+      assert(arrowOnly.statusCode() == 200)
+      val (decoded, _) = org.apache.spark.sql.graft.ColumnBridge.fromArrowStream(
+        spark, arrowOnly.body())
+      assert(fieldsOf(decoded) == parquetFields)
+      assert(decoded.collect().toSeq == parquetOnly)
     }
   }
 
-  test("negotiated wire hop answers a DECIMAL entity in parquet; Arrow-only callers get 406") {
-    import org.apache.spark.sql.types.{DecimalType, LongType}
+  test("a DECIMAL, nested and interval entity crosses as Arrow to negotiating and Arrow-only callers") {
+    import org.apache.spark.sql.types.{ArrayType, DayTimeIntervalType, DecimalType, LongType, StringType}
     val prices = Entity("prices", Seq(
-      Information("doc_id", LongType), Information("price", DecimalType(12, 2))))
+      Information("doc_id", LongType), Information("price", DecimalType(12, 2)),
+      Information("words", ArrayType(StringType)), Information("age", DayTimeIntervalType())))
     val src = DataSource(
       id = "prices_src",
       sourceSql = "SELECT * FROM raw_documents",
       mappings = Seq(FieldMapping("doc_id", "doc_id"),
-        FieldMapping("price", "n_chars", Transformation("{v} / 100"))),
-      defaultPermission = SourcePermission(Set("doc_id", "n_chars"), "true"))
+        FieldMapping("price", "n_chars", Transformation("{v} / 100")),
+        FieldMapping("words", "text", Transformation("split({v}, ' ')")),
+        FieldMapping("age", "n_chars", Transformation("make_dt_interval(0, 0, 0, {v})"))),
+      defaultPermission = SourcePermission(Set("doc_id", "n_chars", "text"), "true"))
     val mesh = Mesh(Map("beta" -> Site("beta",
       entities = Map("prices" -> prices),
       localSources = Map("prices" -> Seq(src)))))
     withServer(mesh, "beta") { server =>
-      val sql = "SELECT doc_id, price FROM prices"
+      val sql = "SELECT doc_id, price, words, age FROM prices"
+      val (parquetFields, parquetOnly) = parquetOnlyAnswer(server.url, sql, "doc_id")
+      assert(parquetFields == prices.informations.map(i => (i.name, i.dtype)))
       val resp = postSync(server.url, sql, RelayClient.SyncAccept)
       assert(resp.statusCode() == 200)
-      assert(resp.headers().firstValue("Content-Type").get == ParquetType)
+      assert(resp.headers().firstValue("Content-Type").get ==
+        graft.transport.ArrowCodec.ContentType)
       val fetched = syncFetch(server.url, sql)
-      assert(!decodedInMemory(fetched))
-      assert(fetched.schema("price").dataType == DecimalType(12, 2))
-      val (parquetFields, parquetOnly) = parquetOnlyAnswer(server.url, sql, "doc_id")
+      assert(decodedInMemory(fetched))
       assert(fieldsOf(fetched) == parquetFields)
       assert(fetched.orderBy("doc_id").collect().toSeq == parquetOnly)
       val arrowOnly = postSync(server.url, sql, graft.transport.ArrowCodec.ContentType)
-      assert(arrowOnly.statusCode() == 406)
-      assert(new String(arrowOnly.body(), "UTF-8").contains("price"))
+      assert(arrowOnly.statusCode() == 200)
+      val (decoded, _) = org.apache.spark.sql.graft.ColumnBridge.fromArrowStream(
+        spark, arrowOnly.body())
+      assert(fieldsOf(decoded) == parquetFields)
+      assert(decoded.orderBy("doc_id").collect().toSeq == parquetOnly)
     }
   }
 
@@ -934,7 +950,31 @@ class TransportSpec extends AnyFunSuite {
       assert(parquetOnly.size == n)
       assert(fieldsOf(fetched) == parquetFields)
       assert(fetched.collect().toSeq == parquetOnly)
+      // a caller accepting only Arrow is refused with 413, decided from
+      // one execution of the query
+      val (arrowOnly, arrowOnlyRuns) = withExecutions(
+        postSync(server.url, sql, graft.transport.ArrowCodec.ContentType))
+      assert(arrowOnly.statusCode() == 413)
+      assert(arrowOnlyRuns.size == 1, arrowOnlyRuns)
     }
+  }
+
+  test("an Arrow-only caller gets 413 exactly when the result is past the Arrow byte bound") {
+    // a row of (doc_id, 1000-byte text, n_chars) is 1032 UnsafeRow bytes:
+    // an 8-byte null bitset, three 8-byte slots and the text
+    val fit = RelayServer.WireArrowMaxBytes / 1032
+    def source(n: Long) = DataSource(
+      id = s"docs_$n",
+      sourceSql = s"""SELECT id AS doc_id, repeat('x', 1000) AS text, 'en' AS lang,
+                     |'gen' AS source, 8L AS n_chars FROM range($n)""".stripMargin,
+      mappings = identityDocMappings,
+      defaultPermission = SourcePermission(docCols, "true"))
+    val sql = "SELECT doc_id, text, n_chars FROM documents"
+    for ((n, code) <- Seq(fit -> 200, (fit + 1) -> 413))
+      withServer(betaMesh(source(n)), "beta") { server =>
+        val resp = postSync(server.url, sql, graft.transport.ArrowCodec.ContentType)
+        assert(resp.statusCode() == code, n)
+      }
   }
 
   test("a multi-partition parquet-only answer keeps the Arrow answer's rows and order, from one execution") {

@@ -9,7 +9,11 @@ import org.apache.spark.sql.SparkSession
   * The settings below are defaults: a key already set as a JVM system
   * property (`-Dspark.sql.adaptive.enabled=false`, passed through
   * `SPARK_GRAFT_JAVA_OPTS` or spark-submit) keeps its value, since Spark
-  * reads `spark.*` system properties into every session it builds. */
+  * reads `spark.*` system properties into every session it builds.
+  *
+  * Every session it returns plans comparison literals in filters as
+  * references ([[graft.plans.ParamLiteralStrategy]]), so a query shape
+  * compiles once whatever its literals. */
 object GraftSession {
 
   /** Local task slots: `SPARK_GRAFT_CPUS`, else the host's full width —
@@ -75,6 +79,7 @@ object GraftSession {
     }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.plans.ParamLiteralStrategy.install(spark)
     spark
   }
 }

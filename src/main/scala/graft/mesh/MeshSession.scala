@@ -22,6 +22,10 @@ class MeshSession private (
     meshProvider: () => graft.catalog.Mesh,
     val siteName: String) {
 
+  // a relay serves one query shape with new literals per request: compile
+  // each shape once, also in a session GraftSession did not build
+  graft.plans.ParamLiteralStrategy.install(spark)
+
   /** Static catalog (a fixed Mesh value). */
   def this(spark: SparkSession, mesh: graft.catalog.Mesh, siteName: String) =
     this(spark, () => mesh, siteName)

@@ -18,6 +18,9 @@ import graft.{Bench, GraftSession, SparkEntry}
   *  - `TIMED <name> min=<s> s (runs: …)`, the line `tools/sf1_report.py`
   *    reads;
   *  - `PROFILE <name> construct=<s> exec=<s>`, each the min of the three;
+  *  - `CODEGEN <name> classes=<n> compile_ms=<ms>`, the classes Spark's
+  *    codegen compiled during the last run and their Janino time, from
+  *    `CodegenMetrics` and `CodeGenerator.compileTime`;
   *  - every job of the last run with its wall time and phase, and under it
   *    each completed stage's task run and CPU time;
   *  - the executed plan of a `collect()` in full (AQE's final plan first),
@@ -50,6 +53,7 @@ object Profile {
     fn(spark, sfDir).count() // warmup
     val runs = (1 to 3).map { run =>
       Bench.settle()
+      val (classes0, compileNs0) = codegen
       sc.setLocalProperty(Tag, s"$name#$run/construct")
       val t0 = System.nanoTime()
       val df = fn(spark, sfDir)
@@ -58,13 +62,16 @@ object Profile {
       df.count()
       val t2 = System.nanoTime()
       sc.setLocalProperty(Tag, null)
-      ((t1 - t0) / 1e9, (t2 - t1) / 1e9)
+      val (classes1, compileNs1) = codegen
+      ((t1 - t0) / 1e9, (t2 - t1) / 1e9, classes1 - classes0, compileNs1 - compileNs0)
     }
-    val totals = runs.map { case (c, e) => c + e }
+    val totals = runs.map { case (c, e, _, _) => c + e }
     println(f"TIMED $name%-28s min=${totals.min}%.3f s " +
       s"(runs: ${totals.map(t => f"$t%.3f").mkString(", ")})")
     println(f"PROFILE $name%-28s construct=${runs.map(_._1).min}%.3f " +
       f"exec=${runs.map(_._2).min}%.3f")
+    println(f"CODEGEN $name%-28s classes=${runs.last._3}%d " +
+      f"compile_ms=${runs.last._4 / 1e6}%.1f")
 
     log.drain(spark, s"$name/drain")
     Seq("construct", "execute").foreach { phase =>
@@ -92,6 +99,11 @@ object Profile {
       s"reused=${count("ReusedExchange|ReusedQueryStage")} ====")
     println(plan)
   }
+
+  /** Spark's codegen totals in this JVM: classes compiled, compile ns. */
+  private def codegen: (Long, Long) = (
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+    org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime)
 
   private final case class Job(id: Int, stageIds: Seq[Int], startMs: Long)
 

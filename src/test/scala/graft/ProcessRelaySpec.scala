@@ -217,6 +217,45 @@ class ProcessRelaySpec extends AnyFunSuite {
     }
   }
 
+  test("a relay answers small sync requests without waiting on the client's delayed ACK") {
+    // a forked RelayMain: its RelayServer is the JVM's first HttpServer,
+    // so the nodelay setting it makes is the one the JDK reads
+    val root = Files.createTempDirectory("graft_procnodelay")
+    val cfg = Files.createDirectory(root.resolve("config"))
+    val results = Files.createDirectory(root.resolve("results"))
+    val cwd = Files.createDirectory(root.resolve("cwd"))
+    writeConfig(cfg)
+    val port = freePort()
+    val url = s"http://127.0.0.1:$port"
+    val proc = launchRelay(cfg, results, port, cwd, root.resolve("relay.log"))
+    try {
+      awaitCatalog(url)
+      val http = java.net.http.HttpClient.newBuilder()
+        .version(java.net.http.HttpClient.Version.HTTP_1_1).build()
+      // the validator rejects this text before Spark runs, so the round
+      // trip is the transport's: a small JSON answer, headers then body
+      val req = java.net.http.HttpRequest.newBuilder(java.net.URI.create(url + "/query/sync"))
+        .header("Content-Type", "application/json")
+        .POST(java.net.http.HttpRequest.BodyPublishers.ofString(
+          """{"sql": "DROP TABLE documents"}"""))
+        .build()
+      def roundTripMs(): Double = {
+        val t0 = System.nanoTime()
+        val resp = http.send(req, java.net.http.HttpResponse.BodyHandlers.ofByteArray())
+        assert(resp.statusCode() == 400, new String(resp.body()))
+        (System.nanoTime() - t0) / 1e6
+      }
+      // past the connection's first exchanges, which Linux ACKs at once
+      (1 to 5).foreach(_ => roundTripMs())
+      val ms = (1 to 15).map(_ => roundTripMs()).sorted
+      // with Nagle on, each answer waits ~40 ms for the delayed ACK
+      assert(ms(7) < 20, ms.map(m => f"$m%.1f").mkString(", "))
+    } finally {
+      proc.destroy()
+      proc.waitFor(30, java.util.concurrent.TimeUnit.SECONDS): Unit
+    }
+  }
+
   private object Fixtures {
     val documentsEntity: Entity = graft.mesh.Fixtures.documentsEntity
   }

@@ -87,9 +87,7 @@ class TransportSpec extends AnyFunSuite {
     * registers the entity views a request reads). The client's `[wire]`
     * diagnostic job is turned off for the duration, so with a parquet or
     * Arrow fetch inside `f` only the serving relay's query runs are
-    * counted. A sentinel action run after `f` marks the end: the listener
-    * bus delivers in order, so once its event arrives every earlier one
-    * has. */
+    * counted. Sentinel actions run before and after `f` mark the window. */
   private def withExecutions[A](f: => A): (A, Seq[String]) = {
     import org.apache.spark.sql.execution.QueryExecution
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]()
@@ -101,16 +99,24 @@ class TransportSpec extends AnyFunSuite {
     }
     spark.listenerManager.register(listener)
     sys.props("graft.wire.quiet") = "1"
-    try {
-      val a = f
+    // run a sentinel action and wait for its event: the bus delivers in
+    // order, so every earlier event has arrived once it has
+    def mark(): QueryExecution = {
       val sentinel = spark.range(1)
       sentinel.collect()
       val deadline = System.currentTimeMillis() + 30000
       while (!seen.asScala.exists(_._2 eq sentinel.queryExecution) &&
           System.currentTimeMillis() < deadline) Thread.sleep(20)
-      val ran = seen.asScala.toSeq
-      assert(ran.exists(_._2 eq sentinel.queryExecution), "listener bus did not drain")
-      (a, ran.takeWhile(!_._2.eq(sentinel.queryExecution)).collect {
+      assert(seen.asScala.exists(_._2 eq sentinel.queryExecution), "listener bus did not drain")
+      sentinel.queryExecution
+    }
+    try {
+      // an earlier test's execution can be delivered after `register`
+      val start = mark()
+      val a = f
+      val end = mark()
+      (a, seen.asScala.toSeq.dropWhile(!_._2.eq(start)).drop(1)
+          .takeWhile(!_._2.eq(end)).collect {
         case (name, qe) if !qe.logical.isInstanceOf[
           org.apache.spark.sql.execution.command.CreateViewCommand] => name
       })
